@@ -70,8 +70,10 @@ class _FusedWordAnalyser(Analyser):
     The generic generator chain costs 4 nested function calls per
     token; this inlines them (~3x faster framing, the index build's
     hottest loop).  Output equivalence with the generic chain is
-    asserted by a differential test (tests/test_analysis.py) and by the
-    stored-reference-index parity tests."""
+    asserted by a differential test on hand-written edge cases that
+    always runs (tests/test_analysis.py); the corpus differential and
+    the stored-reference-index parity tests run only where the
+    reference checkout's test resources are present."""
 
     _stopset: frozenset
     _minsize: int

@@ -246,15 +246,11 @@ def test_analyse_text_paragraphs_reset_nothing_share_frames():
     assert len(frames) == 2
 
 
-def test_fused_analyser_equals_generic_chain():
-    """The fused single-pass DefaultAnalyser/TestAnalyser must produce
-    exactly the generic tokenizer+filter chain's output on real text."""
-    from caterpillar_spark.analysis.analyser import (
-        Analyser,
-        DefaultAnalyser,
-        TestAnalyser,
-        _SIMPLE_TOKENIZER,
-    )
+def assert_fused_matches_generic(samples):
+    """Assert the fused single-pass DefaultAnalyser/TestAnalyser yield the
+    same ``(value, position, stopped)`` stream as the generic
+    tokenizer+filter chain built from their own ``get_filters()``."""
+    from caterpillar_spark.analysis.analyser import Analyser, _SIMPLE_TOKENIZER
 
     class GenericShim(Analyser):
         def __init__(self, fused):
@@ -266,17 +262,6 @@ def test_fused_analyser_equals_generic_chain():
         def get_filters(self):
             return self._fused.get_filters()
 
-    samples = [
-        "The Quick brown fox's jumped, over!! 'the' lazy--dog...",
-        "  @user and #tag  (parens) [brackets] ___ ... !!",
-        "Mock Turtle said to Alice's friend: don't.",
-        "a I x 'W. RABBIT' engraved 1865 3.14 e.g. Mr. Smith",
-        "",
-        "word",
-    ]
-    with open("/root/reference/caterpillar/test_resources/alice_test_data.txt") as f:
-        samples += f.read().split("\n\n")[:30]
-
     for make in (DefaultAnalyser, TestAnalyser):
         fused = make()
         generic = GenericShim(fused)
@@ -287,3 +272,27 @@ def test_fused_analyser_equals_generic_chain():
                 for t in Analyser.analyse(generic, s)
             ]
             assert got == want, (make.__name__, s[:60])
+
+
+def test_fused_analyser_equals_generic_chain():
+    """The fused single-pass DefaultAnalyser/TestAnalyser must produce
+    exactly the generic tokenizer+filter chain's output on hand-written
+    edge cases: possessives, leading @/#, compound names, all-punctuation
+    tokens, the empty string and a single word.  The same differential
+    over Alice paragraphs lives in the ``@needs_ref`` sibling below."""
+    assert_fused_matches_generic([
+        "The Quick brown fox's jumped, over!! 'the' lazy--dog...",
+        "  @user and #tag  (parens) [brackets] ___ ... !!",
+        "Mock Turtle said to Alice's friend: don't.",
+        "a I x 'W. RABBIT' engraved 1865 3.14 e.g. Mr. Smith",
+        "",
+        "word",
+    ])
+
+
+@needs_ref
+def test_fused_analyser_equals_generic_chain_alice():
+    """Fused-vs-generic differential on the first 30 paragraphs of the
+    reference's Alice test corpus."""
+    with open(os.path.join(REF_RESOURCES, "alice_test_data.txt")) as f:
+        assert_fused_matches_generic(f.read().split("\n\n")[:30])
