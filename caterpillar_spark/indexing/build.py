@@ -37,8 +37,9 @@ Scale design:
   key.  Query-time the driver computes the buckets of its query terms
   and reads only those directories (partition pruning) — the Spark
   analog of the reference's clustered (term_id, frame_id) primary key.
-* The postings write is shuffle-free (frames -> explode -> write); the
-  only shuffles are the two statistics aggregations, both partial-agg
+* Each table's partition column and in-file sort keys are declared
+  once, in :data:`LAYOUTS`, and every writer goes through
+  :func:`write_table`.  The statistics aggregations are partial-agg
   (map-side combined) so hot terms don't skew the exchange.
 * Resumability: buckets are written in ``checkpoint_groups`` slices;
   each completed slice appends a manifest entry with metrics.  A
@@ -50,15 +51,106 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from caterpillar_spark.framing import frames_to_postings
 
 DEFAULT_BUCKETS = 64
+
+
+@dataclass(frozen=True)
+class Layout:
+    """A persisted table's physical layout: the column its directories
+    partition on, the keys rows are sorted by inside each file, and the
+    column a write with a fixed task count hash-spreads rows on."""
+
+    partition: Optional[str]
+    keys: tuple
+    spread: Optional[str] = None
+
+
+# Term-major tables keep a term's rows contiguous and doc-major ones a
+# document's, so parquet min/max row-group stats prune point reads.
+LAYOUTS = {
+    "postings": Layout("term_bucket", ("term", "doc_id", "frame_seq"), "term"),
+    "lists": Layout("term_bucket", ("term", "block"), "term"),
+    "positions": Layout("term_bucket", ("term", "block"), "term"),
+    "term_stats": Layout("term_bucket", ("term",), "term"),
+    "forward": Layout(
+        "fwd_bucket", ("doc_id", "field", "frame_seq", "term"), "doc_id"
+    ),
+    "attributes": Layout("type", ("value", "doc_id", "frame_seq")),
+    "docs": Layout(None, ("doc_id",)),
+    "doc_fields": Layout(None, ("doc_id", "field")),
+    "field_stats": Layout(None, ()),
+}
+
+
+def write_table(
+    df: DataFrame,
+    dest: str,
+    table: str,
+    mode: str = "overwrite",
+    parts: Optional[int] = None,
+    dynamic: bool = False,
+) -> None:
+    """Write ``df`` to ``dest`` in ``table``'s declared layout.
+
+    A partitioned table is spread over ``parts`` tasks by its spread
+    column when given (the build's write parallelism), else one task
+    per partition value.  Its sort is led by the partition column: the
+    file writer needs rows grouped by that column, and when the sort
+    does not already provide it the writer replaces the sort with its
+    own, leaving the files unsorted.  Unpartitioned sorted tables are
+    range-partitioned on their first key; field statistics go to one
+    file.  ``dynamic`` overwrites only the partitions written."""
+    lay = LAYOUTS[table]
+    if lay.partition:
+        df = (
+            df.repartition(parts, lay.spread)
+            if parts
+            else df.repartition(lay.partition)
+        )
+        w = df.sortWithinPartitions(lay.partition, *lay.keys).write
+        w = w.partitionBy(lay.partition)
+    elif lay.keys:
+        n = max(df.sparkSession.sparkContext.defaultParallelism // 4, 1)
+        w = df.repartitionByRange(n, lay.keys[0]).sortWithinPartitions(*lay.keys).write
+    else:
+        w = df.coalesce(1).write
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.mode(mode).parquet(dest)
+
+
+def atomic_write_json(path: str, obj, **dump_kw) -> None:
+    """Replace ``path`` with ``obj`` as JSON so that a crash or power
+    loss leaves either the whole old file or the whole new one: write a
+    sibling temp file, fsync it, rename it over ``path``, then fsync
+    the directory so the rename itself is durable."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh, **dump_kw)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    fd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def postings_with_bucket(postings: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -289,11 +381,7 @@ def _load_manifest(path: str) -> Optional[dict]:
 
 
 def _save_manifest(path: str, manifest: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, _manifest_path(path))
+    atomic_write_json(_manifest_path(path), manifest, indent=2, sort_keys=True)
 
 
 def _swap_dir(final: str, tmp: str) -> None:
@@ -306,8 +394,6 @@ def _swap_dir(final: str, tmp: str) -> None:
     renaming ``.old`` back, so readers never see a missing table across
     a crash; a crash after the second rename leaves at worst a stale
     ``.old`` that the next swap garbage-collects."""
-    import shutil
-
     old = final + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(final):
@@ -326,6 +412,66 @@ def _swap_dir(final: str, tmp: str) -> None:
         else:
             raise
     shutil.rmtree(old, ignore_errors=True)
+
+
+def _replace_tables(
+    root: str, tables: dict, tag: str, parts: Optional[int] = None
+) -> None:
+    """Rewrite each named table of the index at ``root``: stage every
+    one beside its live directory (``_<name>.<tag>``), then swap them
+    in one by one (:func:`_swap_dir`)."""
+    staged = {}
+    for name, df in tables.items():
+        staged[name] = os.path.join(root, f"_{name}.{tag}")
+        shutil.rmtree(staged[name], ignore_errors=True)
+        write_table(df, staged[name], name, parts=parts)
+    for name, tmp in staged.items():
+        _swap_dir(os.path.join(root, name), tmp)
+
+
+def fold_statistics(index: InvertedIndex) -> dict:
+    """The index's statistics tables with partial rows (one set per
+    append) summed to one row per key: ``term_stats`` per (term, field)
+    and ``field_stats`` per field."""
+    term_stats = index.term_stats().groupBy("term", "field", "term_bucket").agg(
+        F.sum("total_occurrences").alias("total_occurrences"),
+        F.sum("frames_occuring").alias("frames_occuring"),
+        F.sum("docs_occuring").alias("docs_occuring"),
+    )
+    field_stats = index.field_stats().groupBy("field").agg(
+        F.sum("frame_count").alias("frame_count"),
+        F.sum("doc_count").alias("doc_count"),
+        F.sum("token_count").alias("token_count"),
+        (F.sum("token_count") / F.sum("frame_count")).alias("avg_frame_tokens"),
+    )
+    return {"term_stats": term_stats, "field_stats": field_stats}
+
+
+def _posting_tables(posts: DataFrame, manifest: dict, doc_lens: DataFrame) -> dict:
+    """The tables derived from bucketed postings ``posts``: the postings
+    themselves, the compressed lists (block bounds against the
+    manifest's avgdl) and term statistics, plus the positions and
+    forward layouts when the manifest carries them."""
+    from caterpillar_spark.indexing.postinglists import (
+        build_position_lists,
+        build_posting_lists,
+    )
+
+    raw = posts.drop("term_bucket")
+    nb, bits = manifest["num_buckets"], manifest.get("block_bits", 4)
+    tables = {
+        "postings": posts,
+        "lists": build_posting_lists(
+            raw, num_buckets=nb, block_bits=bits,
+            avgdl=manifest["avgdl"], doc_lens=doc_lens,
+        ),
+        "term_stats": postings_with_bucket(term_statistics(raw), nb),
+    }
+    if manifest.get("with_positions"):
+        tables["positions"] = build_position_lists(raw, num_buckets=nb, block_bits=bits)
+    if manifest.get("with_forward"):
+        tables["forward"] = forward_rows(raw, manifest.get("fwd_buckets", nb))
+    return tables
 
 
 def build_index(
@@ -399,11 +545,6 @@ def _build_index_locked(
     full postings relation (doc partitioning is orthogonal to the
     term-bucket checkpoint slices) alongside the statistics tables.
     """
-    from caterpillar_spark.indexing.postinglists import (
-        build_position_lists,
-        build_posting_lists,
-    )
-
     spark = frames.sparkSession
     loaded = _load_manifest(path) if resume else None
     manifest = loaded or {
@@ -430,9 +571,7 @@ def _build_index_locked(
     if source is not None:
         manifest["source"] = source
     if with_positions:
-        manifest["with_positions"] = True
-    elif manifest.get("with_positions"):
-        with_positions = True  # resumed build keeps its layouts
+        manifest["with_positions"] = True  # a resumed build keeps its flag
     if manifest.get("stats_done"):
         # resumed build past the stats/forward phase keeps its choice
         with_forward = bool(manifest.get("with_forward"))
@@ -453,19 +592,16 @@ def _build_index_locked(
     # Corpus constants for BM25 (document count, avg doc length) come
     # from the full frames relation, not a slice; cached in the manifest
     # so a resumed build skips the pass.
+    doc_lens = frames.groupBy("doc_id").agg(
+        F.sum("frame_tokens").cast("long").alias("dl")
+    )
     if "n_docs" not in manifest:
-        doc_tok = frames.groupBy("doc_id").agg(
-            F.sum("frame_tokens").cast("long").alias("dl")
-        )
-        agg = doc_tok.agg(
+        agg = doc_lens.agg(
             F.count("*").alias("n"), F.avg("dl").alias("avgdl")
         ).collect()[0]
         manifest["n_docs"] = int(agg["n"])
         manifest["avgdl"] = float(agg["avgdl"] or 1.0)
         _save_manifest(path, manifest)
-    doc_lens = frames.groupBy("doc_id").agg(
-        F.sum("frame_tokens").cast("long").alias("dl")
-    )
 
     bounds = [
         (g * num_buckets // checkpoint_groups,
@@ -478,114 +614,9 @@ def _build_index_locked(
     # term hash (a term's rows colocate, so term-sorted files and
     # row-group pruning survive), so every core writes even when
     # num_buckets < cores; the writer routes rows into bucket dirs.
+    # Slices use dynamic partition overwrite, so re-running a slice
+    # after a crash replaces only its own buckets.
     wp = max(spark.sparkContext.defaultParallelism * 2, 2)
-
-    def write_postings(slice_df):
-        (
-            slice_df.repartition(wp, "term")
-            .sortWithinPartitions("term_bucket", "term", "doc_id", "frame_seq")
-            .write.partitionBy("term_bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "postings"))
-        )
-
-    def write_lists(slice_df):
-        (
-            build_posting_lists(
-                slice_df.drop("term_bucket"),
-                num_buckets=num_buckets,
-                block_bits=manifest["block_bits"],
-                avgdl=manifest["avgdl"],
-                doc_lens=doc_lens,
-            )
-            .repartition(wp, "term")
-            .sortWithinPartitions("term_bucket", "term", "block")
-            .write.partitionBy("term_bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "lists"))
-        )
-
-    def write_positions(slice_df):
-        (
-            build_position_lists(
-                slice_df.drop("term_bucket"),
-                num_buckets=num_buckets,
-                block_bits=manifest["block_bits"],
-            )
-            .repartition(wp, "term")
-            .sortWithinPartitions("term_bucket", "term", "block")
-            .write.partitionBy("term_bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "positions"))
-        )
-
-    def write_term_stats():
-        # The pipeline is deterministic in `frames`, so the in-memory
-        # postings relation equals what the slices persisted (also on
-        # resume, where the caller passes the same input) — aggregate it
-        # directly instead of reading the parquet back.
-        (
-            term_statistics(posts.drop("term_bucket"))
-            .withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"),
-            )
-            .repartition(
-                max(spark.sparkContext.defaultParallelism, 2), "term"
-            )
-            .sortWithinPartitions("term_bucket", "term")
-            .write.partitionBy("term_bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "term_stats"))
-        )
-
-    def write_field_stats():
-        field_statistics(frames).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "field_stats")
-        )
-
-    def write_forward():
-        # Doc-major copy: repartition by doc_id for write parallelism
-        # (rows of one doc colocate), route into pmod buckets, sort by
-        # doc_id within files so point reads prune row groups.
-        (
-            forward_rows(posts.drop("term_bucket"), manifest["fwd_buckets"])
-            .repartition(wp, "doc_id")
-            .sortWithinPartitions("fwd_bucket", "doc_id", "field", "frame_seq", "term")
-            .write.partitionBy("fwd_bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "forward"))
-        )
-
-    def write_docs():
-        # Per-document ledger, range-sorted by doc_id so membership
-        # probes (incremental-append dup guard, stored-doc joins) prune
-        # on parquet min/max stats.
-        (
-            doc_lens.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "docs"))
-        )
-
-    def write_doc_fields():
-        # Per-(doc, field) frame/token ledger from the FRAMES relation
-        # (includes frames with no postings — all tokens stop-marked),
-        # so deletes can rebuild field statistics exactly.
-        (
-            doc_field_stats(frames)
-            .repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id", "field")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "doc_fields"))
-        )
 
     # All outputs derive from the same persisted frames and land in
     # different directories, so they run as concurrent Spark jobs — one
@@ -594,28 +625,44 @@ def _build_index_locked(
     # once both of its layouts are on disk, and a crash simply re-runs
     # unacknowledged slices (idempotent dynamic partition overwrite).
     with ThreadPoolExecutor(4) as pool:
+
+        def write(name, df, **kw):
+            return pool.submit(write_table, df, os.path.join(path, name), name, **kw)
+
         t0 = time.time()
         slice_futs = []
         for g, (lo, hi) in enumerate(bounds):
             key = str(g)
             if key in manifest["completed_slices"]:
                 continue
-            slice_df = posts.where(
-                (F.col("term_bucket") >= lo) & (F.col("term_bucket") < hi)
+            tables = _posting_tables(
+                posts.where((F.col("term_bucket") >= lo) & (F.col("term_bucket") < hi)),
+                manifest, doc_lens,
             )
-            futs = [pool.submit(write_postings, slice_df),
-                    pool.submit(write_lists, slice_df)]
-            if with_positions:
-                futs.append(pool.submit(write_positions, slice_df))
+            futs = [
+                write(name, tables[name], parts=wp, dynamic=True)
+                for name in ("postings", "lists", "positions") if name in tables
+            ]
             slice_futs.append((key, lo, hi, futs))
         stats_futs = []
         if not manifest.get("stats_done"):
-            stats_futs = [pool.submit(write_term_stats),
-                          pool.submit(write_field_stats),
-                          pool.submit(write_docs),
-                          pool.submit(write_doc_fields)]
+            # The pipeline is deterministic in `frames`, so the in-memory
+            # postings relation equals what the slices persisted (also on
+            # resume, where the caller passes the same input) — derive
+            # the statistics and forward copy from it directly.
+            tables = _posting_tables(posts, manifest, doc_lens)
+            stats_futs = [
+                write("term_stats", tables["term_stats"],
+                      parts=max(spark.sparkContext.defaultParallelism, 2)),
+                write("field_stats", field_statistics(frames)),
+                write("docs", doc_lens),
+                # from the FRAMES relation, so frames with no postings
+                # (all tokens stop-marked) count: deletes rebuild field
+                # statistics exactly from this ledger
+                write("doc_fields", doc_field_stats(frames)),
+            ]
             if with_forward:
-                stats_futs.append(pool.submit(write_forward))
+                stats_futs.append(write("forward", tables["forward"], parts=wp))
         for key, lo, hi, futs in slice_futs:
             for f in futs:
                 f.result()
@@ -679,13 +726,7 @@ def _add_attributes_locked(index: InvertedIndex, attributes: DataFrame) -> Inver
             ["doc_id", "frame_seq", "type", "value"],
             "left_anti",
         )
-    (
-        df.repartition("type")
-        .sortWithinPartitions("value", "doc_id", "frame_seq")
-        .write.partitionBy("type")
-        .mode("append")
-        .parquet(path)
-    )
+    write_table(df, path, "attributes", mode="append")
     manifest = index.manifest
     manifest["revision"] = manifest.get("revision", 0) + 1
     _save_manifest(index.path, manifest)
@@ -705,8 +746,6 @@ def build_forward(
     with write_lock(index.path):
         if index.has_forward():
             return index
-        import shutil
-
         spark = index.spark
         manifest = index.manifest
         nb = int(
@@ -714,18 +753,10 @@ def build_forward(
             or manifest.get("fwd_buckets")
             or manifest["num_buckets"]
         )
-        tmp = os.path.join(index.path, "_forward.backfill")
-        shutil.rmtree(tmp, ignore_errors=True)
-        wp = max(spark.sparkContext.defaultParallelism * 2, 2)
-        (
-            forward_rows(index.postings(), nb)
-            .repartition(wp, "doc_id")
-            .sortWithinPartitions("fwd_bucket", "doc_id", "field", "frame_seq", "term")
-            .write.partitionBy("fwd_bucket")
-            .mode("overwrite")
-            .parquet(tmp)
+        _replace_tables(
+            index.path, {"forward": forward_rows(index.postings(), nb)},
+            "backfill", parts=max(spark.sparkContext.defaultParallelism * 2, 2),
         )
-        _swap_dir(os.path.join(index.path, "forward"), tmp)
         manifest["with_forward"] = True
         manifest["fwd_buckets"] = nb
         manifest["revision"] = manifest.get("revision", 0) + 1
@@ -741,7 +772,11 @@ def optimize_index(index: InvertedIndex) -> InvertedIndex:
     statistics rows (streaming appends) into one row per key.  Staged
     rewrite + gap-free rename swap (:func:`_swap_dir` — per-table
     rename pairs, not one atomic multi-table commit), revision
-    bumped.  Writer-locked."""
+    bumped.  Writer-locked.
+
+    The manifest ``avgdl`` and ``n_docs`` are kept: the lists are
+    copied, not re-encoded, so their block bounds still rest on the
+    frozen avgdl (see streaming/incremental.py)."""
     from caterpillar_spark.indexing.lock import write_lock
 
     with write_lock(index.path):
@@ -749,128 +784,21 @@ def optimize_index(index: InvertedIndex) -> InvertedIndex:
 
 
 def _optimize_index_locked(index: InvertedIndex) -> InvertedIndex:
-    import shutil
+    tables = fold_statistics(index)
+    for name in ("postings", "lists", "positions", "forward", "docs",
+                 "doc_fields", "attributes"):
+        p = index._table(name)
+        if os.path.isdir(p):
+            tables[name] = index.spark.read.parquet(p)
+    _replace_tables(index.path, tables, "compact")
 
-    spark = index.spark
     manifest = index.manifest
-
-    plans = {
-        "postings": (index.postings(), ["term", "doc_id", "frame_seq"]),
-        "lists": (index.lists(), ["term", "block"]),
-    }
-    if os.path.isdir(os.path.join(index.path, "positions")):
-        plans["positions"] = (index.position_lists(), ["term", "block"])
-    staging = {}
-    for name, (df, sort_cols) in plans.items():
-        tmp = os.path.join(index.path, f"_{name}.compact")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            df.repartition("term_bucket")
-            .sortWithinPartitions(*sort_cols)
-            .write.partitionBy("term_bucket").mode("overwrite")
-            .parquet(tmp)
-        )
-        staging[name] = tmp
-
-    ts_tmp = os.path.join(index.path, "_term_stats.compact")
-    shutil.rmtree(ts_tmp, ignore_errors=True)
-    (
-        index.term_stats()
-        .groupBy("term", "field", "term_bucket")
-        .agg(
-            F.sum("total_occurrences").alias("total_occurrences"),
-            F.sum("frames_occuring").alias("frames_occuring"),
-            F.sum("docs_occuring").alias("docs_occuring"),
-        )
-        .repartition("term_bucket")
-        .sortWithinPartitions("term")
-        .write.partitionBy("term_bucket").mode("overwrite")
-        .parquet(ts_tmp)
-    )
-    staging["term_stats"] = ts_tmp
-
-    fs_tmp = os.path.join(index.path, "_field_stats.compact")
-    shutil.rmtree(fs_tmp, ignore_errors=True)
-    (
-        index.field_stats()
-        .groupBy("field")
-        .agg(
-            F.sum("frame_count").alias("frame_count"),
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("token_count").alias("token_count"),
-            (F.sum("token_count") / F.sum("frame_count")).alias(
-                "avg_frame_tokens"
-            ),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(fs_tmp)
-    )
-    staging["field_stats"] = fs_tmp
-
-    if os.path.isdir(os.path.join(index.path, "forward")):
-        f_tmp = os.path.join(index.path, "_forward.compact")
-        shutil.rmtree(f_tmp, ignore_errors=True)
-        (
-            index.forward()
-            .repartition("fwd_bucket")
-            .sortWithinPartitions("doc_id", "field", "frame_seq", "term")
-            .write.partitionBy("fwd_bucket")
-            .mode("overwrite")
-            .parquet(f_tmp)
-        )
-        staging["forward"] = f_tmp
-
-    if os.path.isdir(os.path.join(index.path, "docs")):
-        d_tmp = os.path.join(index.path, "_docs.compact")
-        shutil.rmtree(d_tmp, ignore_errors=True)
-        (
-            index.docs()
-            .repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(d_tmp)
-        )
-        staging["docs"] = d_tmp
-
-    if os.path.isdir(os.path.join(index.path, "doc_fields")):
-        df_tmp = os.path.join(index.path, "_doc_fields.compact")
-        shutil.rmtree(df_tmp, ignore_errors=True)
-        (
-            index.doc_fields()
-            .repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id", "field")
-            .write.mode("overwrite")
-            .parquet(df_tmp)
-        )
-        staging["doc_fields"] = df_tmp
-
-    if os.path.isdir(os.path.join(index.path, "attributes")):
-        a_tmp = os.path.join(index.path, "_attributes.compact")
-        shutil.rmtree(a_tmp, ignore_errors=True)
-        (
-            index.attributes()
-            .repartition("type")
-            .sortWithinPartitions("value", "doc_id", "frame_seq")
-            .write.partitionBy("type")
-            .mode("overwrite")
-            .parquet(a_tmp)
-        )
-        staging["attributes"] = a_tmp
-
-    for name, tmp in staging.items():
-        _swap_dir(os.path.join(index.path, name), tmp)
-
     manifest["revision"] = manifest.get("revision", 0) + 1
     manifest.setdefault("metrics", {})["last_optimize_revision"] = manifest[
         "revision"
     ]
     _save_manifest(index.path, manifest)
-    return InvertedIndex(spark, index.path)
+    return InvertedIndex(index.spark, index.path)
 
 
 def delete_documents(index: InvertedIndex, doc_ids) -> InvertedIndex:
@@ -899,15 +827,10 @@ def delete_documents(index: InvertedIndex, doc_ids) -> InvertedIndex:
 
 
 def _delete_documents_locked(index: InvertedIndex, doc_ids) -> InvertedIndex:
-    import shutil
-
-    from caterpillar_spark.indexing.postinglists import build_posting_lists
-
     spark = index.spark
     manifest = index.manifest
-    ids_df = spark.createDataFrame(
-        [(int(d),) for d in doc_ids], "doc_id long"
-    )
+    doc_ids = [int(d) for d in doc_ids]
+    ids_df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id long")
     remaining = index.postings().join(
         F.broadcast(ids_df), "doc_id", "left_anti"
     )
@@ -928,114 +851,28 @@ def _delete_documents_locked(index: InvertedIndex, doc_ids) -> InvertedIndex:
         doc_lens = pseudo_frames.groupBy("doc_id").agg(
             F.sum("frame_tokens").cast("long").alias("dl")
         )
+    # The lists are re-encoded, so their block bounds can take the
+    # survivors' avgdl: the one path that refreshes it.
     agg = doc_lens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 1.0)
-    num_buckets = manifest["num_buckets"]
+    manifest["n_docs"] = int(agg["n"])
+    manifest["avgdl"] = float(agg["avgdl"] or 1.0)
 
-    names = ["postings", "lists", "term_stats", "field_stats", "docs"]
-    has_positions = os.path.isdir(os.path.join(index.path, "positions"))
-    if has_positions:
-        names.append("positions")
-    has_forward = os.path.isdir(os.path.join(index.path, "forward"))
-    if has_forward:
-        names.append("forward")
-    has_ledger = index.has_doc_fields()
-    if has_ledger:
-        names.append("doc_fields")
-    staging = {}
-    for name in names:
-        staging[name] = os.path.join(index.path, f"_{name}.rewrite")
-        shutil.rmtree(staging[name], ignore_errors=True)
-
-    (
-        remaining.repartition("term_bucket")
-        .sortWithinPartitions("term", "doc_id", "frame_seq")
-        .write.partitionBy("term_bucket").mode("overwrite")
-        .parquet(staging["postings"])
-    )
-    (
-        build_posting_lists(
-            remaining.drop("term_bucket"),
-            num_buckets=num_buckets,
-            block_bits=manifest.get("block_bits", 4),
-            avgdl=avgdl,
-            doc_lens=doc_lens,
-        )
-        .repartition("term_bucket").sortWithinPartitions("term", "block")
-        .write.partitionBy("term_bucket").mode("overwrite")
-        .parquet(staging["lists"])
-    )
-    if has_positions:
-        from caterpillar_spark.indexing.postinglists import build_position_lists
-
-        (
-            build_position_lists(
-                remaining.drop("term_bucket"),
-                num_buckets=num_buckets,
-                block_bits=manifest.get("block_bits", 4),
-            )
-            .repartition("term_bucket").sortWithinPartitions("term", "block")
-            .write.partitionBy("term_bucket").mode("overwrite")
-            .parquet(staging["positions"])
-        )
-    if has_forward:
-        (
-            forward_rows(
-                remaining.drop("term_bucket"),
-                manifest.get("fwd_buckets", num_buckets),
-            )
-            .repartition("fwd_bucket")
-            .sortWithinPartitions("doc_id", "field", "frame_seq", "term")
-            .write.partitionBy("fwd_bucket").mode("overwrite")
-            .parquet(staging["forward"])
-        )
-    (
-        term_statistics(remaining.drop("term_bucket"))
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"),
-        )
-        .repartition("term_bucket")
-        .write.partitionBy("term_bucket").mode("overwrite")
-        .parquet(staging["term_stats"])
-    )
-    if has_ledger:
+    tables = _posting_tables(remaining, manifest, doc_lens)
+    tables["docs"] = doc_lens
+    if index.has_doc_fields():
         surviving_ledger = index.doc_fields().join(
             F.broadcast(ids_df), "doc_id", "left_anti"
         )
-        field_statistics_from_ledger(surviving_ledger).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging["field_stats"])
-        (
-            surviving_ledger.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id", "field")
-            .write.mode("overwrite")
-            .parquet(staging["doc_fields"])
-        )
+        tables["field_stats"] = field_statistics_from_ledger(surviving_ledger)
+        tables["doc_fields"] = surviving_ledger
     else:
-        field_statistics(pseudo_frames).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging["field_stats"])
-    (
-        doc_lens.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-        )
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(staging["docs"])
-    )
+        tables["field_stats"] = field_statistics(pseudo_frames)
+    _replace_tables(index.path, tables, "rewrite")
 
-    for name, tmp in staging.items():
-        _swap_dir(os.path.join(index.path, name), tmp)
-
-    manifest["n_docs"] = n_docs
-    manifest["avgdl"] = avgdl
     manifest["revision"] = manifest.get("revision", 0) + 1
     manifest.setdefault("metrics", {})["deleted_docs"] = manifest.get(
         "metrics", {}
-    ).get("deleted_docs", 0) + len(list(doc_ids))
+    ).get("deleted_docs", 0) + len(doc_ids)
     _save_manifest(index.path, manifest)
     return InvertedIndex(spark, index.path)
 

@@ -372,16 +372,3 @@ def posting_list_stats(lists: DataFrame) -> DataFrame:
         ).cast("long").alias("compressed_bytes"),
         F.max("max_freq").alias("max_freq"),
     )
-
-
-def write_posting_lists(lists: DataFrame, path: str) -> None:
-    """Persist partitioned by term_bucket (partition pruning at query
-    time) and sorted by (term, block) within files so parquet row-group
-    min/max stats prune term scans."""
-    (
-        lists.repartition("term_bucket")
-        .sortWithinPartitions("term", "block")
-        .write.partitionBy("term_bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )

@@ -33,7 +33,10 @@ Scoring:
 * ``bm25_doc`` — document-granularity BM25: tf summed over the doc's
   frames before saturation, dl = doc token count, idf over document
   frequencies — numerically identical to the WAND engine
-  (query/wand.py).  NOTE the semantics fork at unit='document':
+  (query/wand.py) until the first ``append_batch``: from then on WAND
+  keeps the frozen manifest avgdl its block bounds were built with,
+  while ``bm25_doc`` takes the docs ledger's current mean
+  (streaming/incremental.py).  NOTE the semantics fork at unit='document':
   ``scorer='bm25'`` sums *frame-level* BM25 scores per document (the
   reference's frame-rollup), ``scorer='bm25_doc'`` is true doc-level
   BM25; they coincide exactly on single-frame documents

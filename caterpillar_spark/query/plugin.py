@@ -24,6 +24,8 @@ from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame
 
+from caterpillar_spark.indexing.build import atomic_write_json
+
 
 @dataclass
 class AnalyticsPlugin:
@@ -85,11 +87,7 @@ def run_plugin(index, plugin: AnalyticsPlugin, force: bool = False) -> dict:
         "tables": tables,
     }
     registry[key] = entry
-    os.makedirs(os.path.dirname(_registry_path(index.path)), exist_ok=True)
-    tmp = _registry_path(index.path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(registry, fh, indent=2, sort_keys=True)
-    os.replace(tmp, _registry_path(index.path))
+    atomic_write_json(_registry_path(index.path), registry, indent=2, sort_keys=True)
     return entry
 
 

@@ -43,12 +43,12 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from caterpillar_spark.indexing.build import atomic_write_json, write_table
 from caterpillar_spark.indexing.postinglists import (
     BM25_B,
     BM25_K1,
     build_posting_lists,
     posting_list_stats,
-    write_posting_lists,
 )
 
 _NEEDED = [
@@ -97,15 +97,13 @@ class CompressedIndex:
             avgdl=avgdl, doc_lens=doc_lens,
         )
         if path:
-            write_posting_lists(lists, path)
-            spark = postings.sparkSession
-            with open(os.path.join(path, "_meta.json"), "w") as fh:
-                json.dump(
-                    {"n_docs": n_docs, "avgdl": avgdl,
-                     "num_buckets": num_buckets,
-                     "block_bits": block_bits}, fh,
-                )
-            lists = spark.read.parquet(path)
+            write_table(lists, path, "lists")
+            atomic_write_json(
+                os.path.join(path, "_meta.json"),
+                {"n_docs": n_docs, "avgdl": avgdl,
+                 "num_buckets": num_buckets, "block_bits": block_bits},
+            )
+            lists = postings.sparkSession.read.parquet(path)
         return cls(lists, n_docs, avgdl, num_buckets, block_bits)
 
     @classmethod

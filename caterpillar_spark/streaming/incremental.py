@@ -23,10 +23,14 @@ Design decisions (documented deviations):
 * **Frozen avgdl for block-max bounds.**  ``max_score_q`` stored in a
   block is computed against the avgdl in the manifest at append time.
   WAND must score with the same avgdl its bounds were built with, so
-  the manifest avgdl is frozen at the first build and only refreshed by
-  a full rebuild/compaction; document frequencies and N stay live.
-  (Refreshing avgdl per batch would silently invalidate older blocks'
-  upper bounds — stale-upward is safe, stale-downward is not.)
+  the manifest avgdl is frozen at the first build; document
+  frequencies and N stay live.  Only ``delete_documents`` refreshes it,
+  because it re-encodes every list; ``optimize_index`` and
+  :func:`compact_statistics` copy the lists and keep it.  (Refreshing
+  avgdl per batch would silently invalidate older blocks' upper
+  bounds — stale-upward is safe, stale-downward is not.)  After an
+  append, WAND therefore scores with the frozen avgdl while
+  ``search(scorer="bm25_doc")`` uses the docs ledger's current mean.
 * Appends are idempotent per Structured Streaming's exactly-once
   ``foreachBatch`` contract with a checkpointLocation; the manifest
   batch ledger double-checks (a replayed batch_id is skipped).
@@ -43,12 +47,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from caterpillar_spark.indexing.build import (
     InvertedIndex,
     _load_manifest,
+    _posting_tables,
+    _replace_tables,
     _save_manifest,
     doc_field_stats,
     field_statistics,
-    forward_rows,
+    fold_statistics,
     postings_with_bucket,
-    term_statistics,
+    write_table,
 )
 from caterpillar_spark.framing import build_frames, frames_to_postings
 
@@ -105,8 +111,6 @@ def _append_batch_locked(
     batch_id: Optional[int],
     on_existing: str,
 ) -> InvertedIndex:
-    from caterpillar_spark.indexing.postinglists import build_posting_lists
-
     spark = frames.sparkSession
     docs_path = os.path.join(path, "docs")
     manifest = _load_manifest(path) or {
@@ -128,7 +132,6 @@ def _append_batch_locked(
     manifest.setdefault("batches", {})
     if batch_id is not None and str(batch_id) in manifest["batches"]:
         return InvertedIndex(spark, path)  # replayed batch: already applied
-    num_buckets = manifest["num_buckets"]
 
     if (
         on_existing != "allow"
@@ -145,12 +148,10 @@ def _append_batch_locked(
         # stop-marked carries no postings, so its length is missing from
         # the backfilled dl — same deviation as delete_documents'
         # pseudo-frames; an original-build ledger has the exact dl.
-        # The write is staged (docs.backfill -> _swap_dir): a crash
+        # The write is staged and swapped in (_replace_tables): a crash
         # mid-backfill must not leave a partial docs/ dir that the next
         # append's isdir gate would treat as a complete ledger (r3
         # advisory).
-        from caterpillar_spark.indexing.build import _swap_dir
-
         backfill = (
             spark.read.parquet(os.path.join(path, "postings"))
             .select("doc_id", "field", "frame_seq", "frame_tokens")
@@ -158,40 +159,44 @@ def _append_batch_locked(
             .groupBy("doc_id")
             .agg(F.sum("frame_tokens").cast("long").alias("dl"))
         )
-        tmp = docs_path + ".backfill"
-        import shutil
+        _replace_tables(path, {"docs": backfill}, "backfill")
 
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            backfill.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
+    # Persist before the duplicate probe, the batch's first action, so
+    # the framing UDF runs once per batch rather than once for the
+    # probe and again for the writes.
+    cached = [frames.persist()]
+    try:
+        if on_existing != "allow" and os.path.isdir(docs_path):
+            new_ids = frames.select("doc_id").distinct()
+            dupes = (
+                spark.read.parquet(docs_path)
+                .select("doc_id")
+                .join(F.broadcast(new_ids), "doc_id", "left_semi")
             )
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        _swap_dir(docs_path, tmp)
+            n_dup = dupes.count()
+            if n_dup:
+                if on_existing == "error":
+                    raise ValueError(
+                        f"{n_dup} doc_ids in this batch are already indexed at "
+                        f"{path}; delete_documents first or use on_existing='skip'"
+                    )
+                frames = frames.join(F.broadcast(dupes), "doc_id", "left_anti")
+                cached.append(frames.persist())
+                if frames.isEmpty():
+                    return InvertedIndex(spark, path)  # nothing new in batch
+        _write_batch(frames, path, manifest, batch_id)
+    finally:
+        for df in cached:
+            df.unpersist()
+    return InvertedIndex(spark, path)
 
-    if on_existing != "allow" and os.path.isdir(docs_path):
-        new_ids = frames.select("doc_id").distinct()
-        dupes = (
-            spark.read.parquet(docs_path)
-            .select("doc_id")
-            .join(F.broadcast(new_ids), "doc_id", "left_semi")
-        )
-        n_dup = dupes.count()
-        if n_dup:
-            if on_existing == "error":
-                raise ValueError(
-                    f"{n_dup} doc_ids in this batch are already indexed at "
-                    f"{path}; delete_documents first or use on_existing='skip'"
-                )
-            frames = frames.join(F.broadcast(dupes), "doc_id", "left_anti")
-            if frames.isEmpty():
-                return InvertedIndex(spark, path)  # nothing new in batch
 
+def _write_batch(
+    frames: DataFrame, path: str, manifest: dict, batch_id: Optional[int]
+) -> None:
+    """Append one batch of never-seen documents to every table of the
+    index at ``path`` and commit its manifest entry."""
     t0 = time.time()
-    frames.persist()
     doc_tok = frames.groupBy("doc_id").agg(
         F.sum("frame_tokens").cast("long").alias("dl")
     )
@@ -202,89 +207,20 @@ def _append_batch_locked(
     if "avgdl" not in manifest:
         manifest["avgdl"] = batch_tokens / batch_docs if batch_docs else 1.0
         manifest["n_docs"] = 0
-        manifest["total_tokens"] = 0
 
-    posts = postings_with_bucket(frames_to_postings(frames), num_buckets)
-    (
-        posts.repartition("term_bucket")
-        .sortWithinPartitions("term", "doc_id", "frame_seq")
-        .write.partitionBy("term_bucket").mode("append")
-        .parquet(os.path.join(path, "postings"))
-    )
-    (
-        build_posting_lists(
-            posts.drop("term_bucket"),
-            num_buckets=num_buckets,
-            block_bits=manifest["block_bits"],
-            avgdl=manifest["avgdl"],
-            doc_lens=doc_tok,
-        )
-        .repartition("term_bucket").sortWithinPartitions("term", "block")
-        .write.partitionBy("term_bucket").mode("append")
-        .parquet(os.path.join(path, "lists"))
-    )
-    if manifest.get("with_positions"):
-        from caterpillar_spark.indexing.postinglists import build_position_lists
-
-        (
-            build_position_lists(
-                posts.drop("term_bucket"),
-                num_buckets=num_buckets,
-                block_bits=manifest["block_bits"],
-            )
-            .repartition("term_bucket").sortWithinPartitions("term", "block")
-            .write.partitionBy("term_bucket").mode("append")
-            .parquet(os.path.join(path, "positions"))
-        )
-    if manifest.get("with_forward"):
-        (
-            forward_rows(
-                posts.drop("term_bucket"),
-                manifest.get("fwd_buckets", num_buckets),
-            )
-            .repartition("fwd_bucket")
-            .sortWithinPartitions("doc_id", "field", "frame_seq", "term")
-            .write.partitionBy("fwd_bucket").mode("append")
-            .parquet(os.path.join(path, "forward"))
-        )
-    (
-        term_statistics(posts.drop("term_bucket"))
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"),
-        )
-        .repartition("term_bucket")
-        .write.partitionBy("term_bucket").mode("append")
-        .parquet(os.path.join(path, "term_stats"))
-    )
-    field_statistics(frames).coalesce(1).write.mode("append").parquet(
-        os.path.join(path, "field_stats")
-    )
-    (
-        doc_tok.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-        )
-        .sortWithinPartitions("doc_id")
-        .write.mode("append")
-        .parquet(docs_path)
-    )
+    posts = postings_with_bucket(frames_to_postings(frames), manifest["num_buckets"])
+    tables = _posting_tables(posts, manifest, doc_tok)
+    tables["field_stats"] = field_statistics(frames)
+    tables["docs"] = doc_tok
     if manifest.get("with_doc_fields"):
         # per-(doc, field) ledger append — NOT written on legacy
         # indexes without the flag (a partial ledger would undercount
         # field statistics on the delete path)
-        (
-            doc_field_stats(frames)
-            .repartitionByRange(
-                max(spark.sparkContext.defaultParallelism // 4, 1), "doc_id"
-            )
-            .sortWithinPartitions("doc_id", "field")
-            .write.mode("append")
-            .parquet(os.path.join(path, "doc_fields"))
-        )
-    frames.unpersist()
+        tables["doc_fields"] = doc_field_stats(frames)
+    for name, df in tables.items():
+        write_table(df, os.path.join(path, name), name, mode="append")
 
     manifest["n_docs"] += batch_docs
-    manifest["total_tokens"] = manifest.get("total_tokens", 0) + batch_tokens
     manifest["revision"] += 1
     key = str(batch_id) if batch_id is not None else f"rev{manifest['revision']}"
     manifest["batches"][key] = {
@@ -293,7 +229,6 @@ def _append_batch_locked(
         "seconds": round(time.time() - t0, 3),
     }
     _save_manifest(path, manifest)
-    return InvertedIndex(spark, path)
 
 
 def start_incremental_index(
@@ -342,42 +277,4 @@ def compact_statistics(index: InvertedIndex) -> None:
     from caterpillar_spark.indexing.lock import write_lock
 
     with write_lock(index.path):
-        return _compact_statistics_locked(index)
-
-
-def _compact_statistics_locked(index: InvertedIndex) -> None:
-    import shutil
-
-    spark = index.spark
-    ts_path = os.path.join(index.path, "term_stats")
-    fs_path = os.path.join(index.path, "field_stats")
-    merged_ts = (
-        index.term_stats()
-        .groupBy("term", "field", "term_bucket")
-        .agg(
-            F.sum("total_occurrences").alias("total_occurrences"),
-            F.sum("frames_occuring").alias("frames_occuring"),
-            F.sum("docs_occuring").alias("docs_occuring"),
-        )
-    )
-    merged_fs = (
-        index.field_stats()
-        .groupBy("field")
-        .agg(
-            F.sum("frame_count").alias("frame_count"),
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("token_count").alias("token_count"),
-            (F.sum("token_count") / F.sum("frame_count")).alias(
-                "avg_frame_tokens"
-            ),
-        )
-    )
-    from caterpillar_spark.indexing.build import _swap_dir
-
-    for df, path, part in ((merged_ts, ts_path, "term_bucket"),
-                           (merged_fs, fs_path, None)):
-        tmp = path + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        w = df.repartition(part).write.partitionBy(part) if part else df.coalesce(1).write
-        w.mode("overwrite").parquet(tmp)
-        _swap_dir(path, tmp)
+        _replace_tables(index.path, fold_statistics(index), "compact")

@@ -45,6 +45,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from caterpillar_spark.indexing.build import atomic_write_json
 from caterpillar_spark.indexing.lock import write_lock
 from caterpillar_spark.ops.linkgraph import extract_links, host_link_edges
 
@@ -79,12 +80,9 @@ def _load_ledger(path: str) -> dict:
 
 
 def _save_ledger(path: str, batch_ids: set, base: Optional[str]) -> None:
-    tmp = _ledger_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_ids": sorted(batch_ids), "base": base}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())  # survive power loss, not just crashes
-    os.replace(tmp, _ledger_path(path))
+    atomic_write_json(
+        _ledger_path(path), {"batch_ids": sorted(batch_ids), "base": base}
+    )
 
 
 def _batch_key(run_id: str, batch_id: int) -> str:

@@ -185,6 +185,42 @@ def test_persist_and_load_roundtrip(spark, corpus, cindex, tmp_path):
     assert any(d.startswith("term_bucket=") for d in os.listdir(path))
 
 
+def test_meta_write_failure_keeps_previous_file(spark, corpus, tmp_path, monkeypatch):
+    """A failure in the middle of writing ``_meta.json`` never leaves a
+    torn file: a rebuild that fails there leaves none for ``load`` to
+    trip on, and a failed rewrite keeps the previous file whole."""
+    import json
+    import os
+
+    from caterpillar_spark.query.wand import CompressedIndex
+
+    def torn_dump(obj, fh, **kw):
+        fh.write('{"n_docs": ')
+        raise OSError("disk full")
+
+    path = str(tmp_path / "cindex")
+    meta = os.path.join(path, "_meta.json")
+    CompressedIndex.build(corpus, num_buckets=8, block_bits=3, path=path)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            CompressedIndex.build(corpus, num_buckets=8, block_bits=3, path=path)
+    assert not os.path.exists(meta)
+
+    from caterpillar_spark.indexing.build import atomic_write_json
+
+    built = CompressedIndex.build(corpus, num_buckets=8, block_bits=3, path=path)
+    before = open(meta).read()
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            atomic_write_json(meta, {"n_docs": 0, "avgdl": 1.0})
+    assert open(meta).read() == before
+    assert not [f for f in os.listdir(path) if f.endswith(".tmp")]
+    loaded = CompressedIndex.load(spark, path)
+    assert (loaded.n_docs, loaded.avgdl) == (built.n_docs, built.avgdl)
+
+
 def test_wand_must_not(corpus, cindex):
     from caterpillar_spark.query.wand import wand_topk
     from caterpillar_spark.indexing.postinglists import doc_level_postings

@@ -292,3 +292,39 @@ def test_retained_handle_sees_appended_statistics(spark, tmp_path):
     # SAME handle object: revision moved, cache must invalidate
     rows = filter_frames(idx, should=["zzznew"], unit="document").collect()
     assert [r["doc_id"] for r in rows] == [3]
+
+
+def test_append_frames_each_batch_once(spark, tmp_path):
+    """On an index that already has a docs ledger, append_batch runs the
+    framing UDF once per batch: the duplicate probe reads the persisted
+    frames instead of framing the batch a second time."""
+    from caterpillar_spark.analysis.analyser import DefaultAnalyser
+
+    calls = spark.sparkContext.accumulator(0)
+
+    class CountingAnalyser(DefaultAnalyser):
+        def analyse(self, value):
+            calls.add(1)
+            return super().analyse(value)
+
+    full = synthetic_webtext(spark, 60, seed=43, partitions=2)
+    ordinal = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("int")
+
+    def frames(cond):
+        return build_frames(
+            ingest_webtext(full.where(cond)), metadata_cols=["lang"],
+            analyser=CountingAnalyser(),
+        )
+
+    path = str(tmp_path / "idx")
+    append_batch(frames(ordinal < 30), path, num_buckets=4)
+    assert os.path.isdir(os.path.join(path, "docs"))
+
+    second = frames(ordinal >= 30)
+    calls.value = 0
+    second.count()  # one framing pass: one analyse() call per sentence
+    sentences = calls.value
+    calls.value = 0
+    idx = append_batch(second, path, num_buckets=4)
+    assert sentences > 0 and calls.value == sentences
+    assert "total_tokens" not in idx.manifest
