@@ -143,7 +143,10 @@ def robots_filter(
     from caterpillar_spark.ops.weburl import host_of
     from pyspark.sql import Window
 
-    for reserved in ("_host", "_path"):
+    # the columns this function adds beside the caller's own
+    for reserved in (
+        "_host", "_path", "_rn", "_r_host", "_r_allow", "_r_prefix"
+    ):
         if reserved in urls.columns:
             raise ValueError(
                 f"robots_filter reserves the column name {reserved!r}"

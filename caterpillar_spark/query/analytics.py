@@ -245,9 +245,8 @@ def proximity_search_index(
     buckets this reads ~n/32 of the postings instead of all of them."""
     from caterpillar_spark.query.engine import _pruned_postings
 
-    spark = index.frames.sparkSession if hasattr(index, "frames") else index.spark
     return proximity_search(
-        _pruned_postings(index, spark, list(terms)), terms, window, ordered
+        _pruned_postings(index, list(terms)), terms, window, ordered
     )
 
 

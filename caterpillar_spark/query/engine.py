@@ -43,9 +43,10 @@ Scoring:
   (tests/test_index_query.py pins both relations on a multi-frame
   corpus).
 
-Execution shape (Spark-first):
+Execution shape (Spark-first): one scoring plan, :func:`_qualifying`,
+serves one query or a batch of them.
 
-1. the query's term list is resolved against ``term_stats`` — a
+1. the queries' term list is resolved against ``term_stats`` — a
    partition-pruned parquet read of only the buckets the query terms
    hash into — and weights are computed driver-side (the analog of the
    reference's precomputed ``term_search_driver`` temp table);
@@ -53,10 +54,12 @@ Execution shape (Spark-first):
    postings scan, itself pruned to the same term buckets and filtered
    by field scoping / metadata predicates on denormalized columns;
 3. one partial-aggregated ``groupBy`` per retrieval unit (frame or
-   document) computes score and the boolean HAVING counters;
-4. top-k runs as ``orderBy(...).limit(k)`` which Catalyst executes as
-   per-partition top-k + single merge (TakeOrderedAndProject) — no full
-   sort at scale.
+   document, plus ``query_id`` for a batch) computes score and the
+   boolean HAVING counters;
+4. two top-k stages sit on that plan: :func:`search` runs
+   ``orderBy(...).limit(k)``, which Catalyst executes as per-partition
+   top-k + single merge (TakeOrderedAndProject) — no full sort at
+   scale; :func:`search_many` ranks each query in a window.
 """
 
 from __future__ import annotations
@@ -85,6 +88,10 @@ class MemoryIndex:
     persisted layout; used by tests and small interactive jobs)."""
 
     frames: DataFrame
+
+    @property
+    def spark(self):
+        return self.frames.sparkSession
 
     def postings(self) -> DataFrame:
         return frames_to_postings(self.frames)
@@ -251,7 +258,7 @@ def _scoped_doc_lens(index, include_fields, exclude_fields) -> DataFrame:
     )
 
 
-def _pruned_postings(index, spark, terms: Sequence[str]) -> DataFrame:
+def _pruned_postings(index, terms: Sequence[str]) -> DataFrame:
     """Postings scan pruned to the query terms: term-bucket partition
     pruning (buckets computed driver-side, no Spark job) + a literal
     ``isin`` predicate that parquet row-group min/max stats use because
@@ -297,20 +304,19 @@ def _resolve_weights(
     # the index handle exactly like the corpus constants below: a warm
     # repeat query runs ZERO statistics jobs, only the retrieval job.
     # Missing terms cache as None so absent vocabulary is not re-probed.
-    ff_scope = (
+    scope = (
         tuple(include_fields) if include_fields else None,
         tuple(exclude_fields) if exclude_fields else None,
         doc_mode,
     )
     ff_cache = _handle_cache(index, "_term_ff_cache")
-    lookup = [t for t in term_values if (ff_scope, t) not in ff_cache]
+    lookup = [t for t in term_values if (scope, t) not in ff_cache]
     if lookup:
         if doc_mode and len(
             _fields_in_scope(index, include_fields, exclude_fields)
         ) > 1:
-            spark = index.frames.sparkSession if isinstance(index, MemoryIndex) else index.spark
             posts = _field_scope(
-                _pruned_postings(index, spark, lookup),
+                _pruned_postings(index, lookup),
                 include_fields, exclude_fields,
             )
             rows = (
@@ -329,39 +335,31 @@ def _resolve_weights(
             )
         found = {r["term"]: r["ff"] for r in rows}
         for t in lookup:
-            ff_cache[(ff_scope, t)] = found.get(t)
+            ff_cache[(scope, t)] = found.get(t)
     ff = {
-        t: ff_cache[(ff_scope, t)]
+        t: ff_cache[(scope, t)]
         for t in term_values
-        if ff_cache[(ff_scope, t)] is not None
+        if ff_cache[(scope, t)] is not None
     }
 
     # Corpus constants are per-(index revision, field-scope) invariants
     # — memoize on the epoch-keyed handle cache so repeated queries run
     # one collect, not two, and appends to the same path invalidate.
-    scope_key = (
-        tuple(include_fields) if include_fields else None,
-        tuple(exclude_fields) if exclude_fields else None,
-        doc_mode,
-    )
     cache = _handle_cache(index, "_consts_cache")
-    if scope_key in cache:
-        n_units, avgdl = cache[scope_key]
-    elif doc_mode:
-        agg = _scoped_doc_lens(index, include_fields, exclude_fields).agg(
-            F.count("*").alias("n"), F.sum("dl").alias("tok")
-        ).collect()[0]
-        n_units = float(agg["n"] or 0)
-        avgdl = (agg["tok"] / agg["n"]) if agg["n"] else 1.0
-        cache[scope_key] = (n_units, avgdl)
-    else:
-        fstats = _field_scope(index.field_stats(), include_fields, exclude_fields)
-        agg = fstats.agg(
-            F.sum("frame_count").alias("n"), F.sum("token_count").alias("tok")
-        ).collect()[0]
-        n_units = float(agg["n"] or 0)
-        avgdl = (agg["tok"] / agg["n"]) if agg["n"] else 1.0
-        cache[scope_key] = (n_units, avgdl)
+    if scope not in cache:
+        if doc_mode:
+            agg = _scoped_doc_lens(index, include_fields, exclude_fields).agg(
+                F.count("*").alias("n"), F.sum("dl").alias("tok")
+            )
+        else:
+            agg = _field_scope(
+                index.field_stats(), include_fields, exclude_fields
+            ).agg(F.sum("frame_count").alias("n"), F.sum("token_count").alias("tok"))
+        row = agg.collect()[0]
+        cache[scope] = (
+            float(row["n"] or 0), (row["tok"] / row["n"]) if row["n"] else 1.0
+        )
+    n_units, avgdl = cache[scope]
 
     weights: Dict[str, float] = {}
     for t in term_values:
@@ -373,6 +371,172 @@ def _resolve_weights(
         else:
             weights[t] = 1.0 + math.log(n_units / (df_t + 1.0))
     return weights, n_units, avgdl
+
+
+def _bm25(tf: str, dl: str, k1: float, b: float, avgdl: float) -> Column:
+    return F.col("weight") * (F.col(tf) * (k1 + 1.0)) / (
+        F.col(tf) + k1 * (1.0 - b + b * F.col(dl) / F.lit(avgdl))
+    )
+
+
+def _field_boost(field_boosts: dict) -> Column:
+    """Row-local ``{field: weight}`` lookup, 1.0 for unlisted fields."""
+    kv = []
+    for fname, boost in sorted(field_boosts.items()):
+        kv.extend([F.lit(fname), F.lit(float(boost))])
+    return F.coalesce(
+        F.element_at(F.create_map(*kv), F.col("field")), F.lit(1.0)
+    )
+
+
+def _unit_keys(unit: str) -> List[str]:
+    # Frame identity is (doc_id, field, frame_seq): frame ordinals are
+    # per-(doc, field), so a multi-field index must not conflate the
+    # same-numbered frames of different fields (reference frame ids are
+    # globally unique; tests/test_index_query.py multi-field invariants).
+    return ["doc_id"] if unit == "document" else ["doc_id", "field", "frame_seq"]
+
+
+def _qualifying(
+    index,
+    queries: Dict[str, dict],
+    batch: bool,
+    unit: str,
+    scorer: str,
+    k1: float,
+    b: float,
+    metadata: Optional[dict],
+    include_fields: Optional[Sequence[str]],
+    exclude_fields: Optional[Sequence[str]],
+    schema,
+    field_boosts: Optional[dict],
+) -> DataFrame:
+    """The scoring plan both :func:`filter_frames` and
+    :func:`search_many` run: every qualifying unit of every query with
+    its score, as ``(query_id, <unit keys>, score)`` when ``batch`` and
+    ``(<unit keys>, score)`` otherwise.
+
+    ``queries`` maps query_id -> a boolean spec dict (``must`` /
+    ``should`` / ``at_least_n`` / ``must_not``).  The union of all
+    queries' terms drives ONE broadcast join into the bucket-pruned
+    postings scan and one partial-aggregated ``groupBy`` keyed by the
+    unit (plus ``query_id`` on the batch path); each query's HAVING
+    constants ride in the broadcast relation, so a term shared by
+    several queries is scanned once."""
+    if schema is not None:
+        from caterpillar_spark.schema import UnknownFieldError
+
+        for fname in [*(include_fields or ()), *(exclude_fields or ())]:
+            if fname not in schema:
+                raise UnknownFieldError(
+                    f"{fname!r} is not defined on this index"
+                )
+    if scorer == "bm25_doc" and unit != "document":
+        raise ValueError("scorer='bm25_doc' requires unit='document'")
+
+    per_query: Dict[str, List[Tuple[str, int, str]]] = {}
+    for qid, spec in queries.items():
+        rows = _groups(
+            spec.get("must", ()),
+            spec.get("should", ()),
+            spec.get("at_least_n") or None,
+            spec.get("must_not", ()),
+        )
+        if not any(kind != "exclude" for _, _, kind in rows):
+            who = f"query {qid!r} needs" if batch else "need"
+            raise ValueError(
+                f"{who} at least one positive term (must/should/at_least_n)"
+            )
+        per_query[qid] = rows
+
+    weights, n_units, avgdl = _resolve_weights(
+        index, [r for rows in per_query.values() for r in rows],
+        include_fields, exclude_fields, scorer,
+    )
+    keys = _unit_keys(unit)
+    qcols = ["query_id"] if batch else []
+
+    # A query none of whose positive terms exists in the index matches
+    # nothing (reference sqlite.py:1340-1345); with no live query at all
+    # no Spark job runs.
+    qrows = []
+    for qid, rows in per_query.items():
+        if all(weights[t] == 0.0 for t, _, kind in rows if kind != "exclude"):
+            continue
+        n_must = len({g for _, g, kind in rows if kind == "must"})
+        nmin = (queries[qid].get("at_least_n") or (0, ()))[0]
+        qrows.extend(
+            (qid, t, g, kind, float(weights[t]), n_must, nmin)
+            for t, g, kind in rows
+        )
+    if not qrows:
+        empty = ("query_id string, " if batch else "") + "doc_id long" + (
+            "" if unit == "document" else ", field string, frame_seq int")
+        return index.spark.createDataFrame([], empty + ", score double")
+    qdf = index.spark.createDataFrame(
+        qrows,
+        "query_id string, term string, group_id int, kind string, "
+        "weight double, n_must int, nmin int",
+    )
+
+    # Bucket pruning + a literal term predicate (redundant with the join
+    # semantically, but as a literal it pushes into the parquet scan
+    # where the term-sorted file layout turns it into row-group min/max
+    # pruning); buckets are computed driver-side — no pre-job.
+    posts = _pruned_postings(index, sorted({r[1] for r in qrows}))
+    posts = _field_scope(posts, include_fields, exclude_fields)
+    if metadata:
+        posts = posts.where(metadata_predicate(metadata, schema=schema))
+    joined = posts.join(F.broadcast(qdf), "term")
+
+    boost = _field_boost(field_boosts) if field_boosts else None
+    if scorer == "bm25_doc":
+        # Document-granularity BM25, the WAND formula (query/wand.py):
+        # tf summed over the doc's frames BEFORE saturation, dl = doc
+        # token count, idf over document frequencies; one extra
+        # partial-agg shuffle.  ``field_boosts`` make it BM25F proper:
+        # the weighted tf sum Σ_field w_f·tf_f feeds the saturation.
+        tf = F.col("freq").cast("double")
+        if boost is not None:
+            tf = tf * boost
+        per_term = joined.groupBy(
+            *qcols, "doc_id", "term", "group_id", "kind", "weight",
+            "n_must", "nmin",
+        ).agg(F.sum(tf).alias("tf"))
+        joined = per_term.join(
+            _scoped_doc_lens(index, include_fields, exclude_fields), "doc_id"
+        )
+        contrib = _bm25("tf", "dl", k1, b, avgdl)
+    else:
+        if scorer == "bm25":
+            contrib = _bm25("freq", "frame_tokens", k1, b, avgdl)
+        else:
+            contrib = F.col("freq") * F.col("weight")
+        if boost is not None:
+            contrib = contrib * boost  # frame scorers: per posting
+
+    positive = F.col("kind") != "exclude"
+    agg = joined.groupBy(*qcols, *keys).agg(
+        F.sum(F.when(positive, contrib).otherwise(0.0)).alias("score"),
+        F.countDistinct(
+            F.when(F.col("kind") == "must", F.col("group_id"))
+        ).alias("_must_hits"),
+        F.countDistinct(
+            F.when(F.col("kind") == "nmin", F.col("group_id"))
+        ).alias("_nmin_hits"),
+        F.max(F.when(~positive, 1).otherwise(0)).alias("_excluded"),
+        F.max(F.when(positive, 1).otherwise(0)).alias("_positive"),
+        F.max("n_must").alias("_n_must"),  # per-query constants
+        F.max("nmin").alias("_nmin"),
+    )
+    # A counter no query constrains is left out of the HAVING clause, so
+    # Catalyst prunes its distinct aggregate (and the Expand it needs).
+    cond = (F.col("_excluded") == 0) & (F.col("_positive") == 1)
+    if any(r[5] for r in qrows):
+        cond = cond & (F.col("_must_hits") == F.col("_n_must"))
+    if any(r[6] for r in qrows):
+        cond = cond & (F.col("_nmin_hits") >= F.col("_nmin"))
+    return agg.where(cond).select(*qcols, *keys, "score")
 
 
 def filter_frames(
@@ -407,125 +571,12 @@ def filter_frames(
     a field raises saturated relevance rather than scaling a
     saturated score.
     """
-    if not (must or should or at_least_n):
-        raise ValueError("need at least one positive term (must/should/at_least_n)")
-    if schema is not None:
-        from caterpillar_spark.schema import UnknownFieldError
-
-        for fname in [*(include_fields or ()), *(exclude_fields or ())]:
-            if fname not in schema:
-                raise UnknownFieldError(
-                    f"{fname!r} is not defined on this index"
-                )
-    spark = index.frames.sparkSession if isinstance(index, MemoryIndex) else index.spark
-
-    rows = _groups(must, should, at_least_n or None, must_not)
-    weights, n_frames, avgdl = _resolve_weights(
-        index, rows, include_fields, exclude_fields, scorer
+    spec = {"must": must, "should": should, "at_least_n": at_least_n,
+            "must_not": must_not}
+    return _qualifying(
+        index, {"q": spec}, False, unit, scorer, k1, b, metadata,
+        include_fields, exclude_fields, schema, field_boosts,
     )
-    if all(weights[t] == 0.0 for t, _, kind in rows if kind != "exclude"):
-        # Early exit: no positive term exists in the index
-        # (reference sqlite.py:1340-1345).
-        empty_schema = (
-            "doc_id long, field string, frame_seq int, score double"
-            if unit == "frame" else "doc_id long, score double"
-        )
-        return spark.createDataFrame([], empty_schema)
-
-    qdf = spark.createDataFrame(
-        [(t, g, kind, float(weights[t])) for t, g, kind in rows],
-        "term string, group_id int, kind string, weight double",
-    )
-
-    # Bucket pruning + a literal term predicate (redundant with the join
-    # semantically, but as a literal it pushes into the parquet scan
-    # where the term-sorted file layout turns it into row-group min/max
-    # pruning); buckets are computed driver-side — no pre-job.
-    posts = _pruned_postings(index, spark, [t for t, _, _ in rows])
-    posts = _field_scope(posts, include_fields, exclude_fields)
-    if metadata:
-        posts = posts.where(metadata_predicate(metadata, schema=schema))
-
-    joined = posts.join(F.broadcast(qdf), "term")
-
-    positive = F.col("kind") != "exclude"
-    if scorer == "bm25_doc":
-        # True document-granularity BM25 (the WAND formula,
-        # query/wand.py:29-31): tf summed over the doc's frames BEFORE
-        # saturation, dl = document token count, idf over document
-        # frequencies.  One extra partial-agg shuffle vs the frame
-        # scorers; ``unit`` must be 'document'.  With ``field_boosts``
-        # this is BM25F proper (Robertson/Zaragoza): the weighted tf
-        # sum tf_doc = Σ_field w_f·tf_f feeds the saturation, so a
-        # boosted field raises saturated relevance instead of scaling
-        # an already-saturated score.
-        if unit != "document":
-            raise ValueError("scorer='bm25_doc' requires unit='document'")
-        tf_term = F.col("freq").cast("double")
-        if field_boosts:
-            kv = []
-            for fname, boost in sorted(field_boosts.items()):
-                kv.extend([F.lit(fname), F.lit(float(boost))])
-            tf_term = tf_term * F.coalesce(
-                F.element_at(F.create_map(*kv), F.col("field")), F.lit(1.0)
-            )
-        per_term = joined.groupBy(
-            "doc_id", "term", "group_id", "kind", "weight"
-        ).agg(F.sum(tf_term).alias("tf"))
-        joined = per_term.join(
-            _scoped_doc_lens(index, include_fields, exclude_fields), "doc_id"
-        )
-        contrib = F.col("weight") * (
-            F.col("tf") * (k1 + 1.0)
-        ) / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-    elif scorer == "bm25":
-        contrib = F.col("weight") * (
-            F.col("freq") * (k1 + 1.0)
-        ) / (
-            F.col("freq")
-            + k1 * (1.0 - b + b * F.col("frame_tokens") / F.lit(avgdl))
-        )
-    else:
-        contrib = F.col("freq") * F.col("weight")
-
-    if field_boosts and scorer != "bm25_doc":
-        # frame scorers: per-posting multiplier (bm25_doc weights tf
-        # inside its saturation sum above — BM25F proper)
-        kv = []
-        for fname, boost in sorted(field_boosts.items()):
-            kv.extend([F.lit(fname), F.lit(float(boost))])
-        contrib = contrib * F.coalesce(
-            F.element_at(F.create_map(*kv), F.col("field")), F.lit(1.0)
-        )
-
-    # Frame identity is (doc_id, field, frame_seq): frame ordinals are
-    # per-(doc, field), so a multi-field index must not conflate the
-    # same-numbered frames of different fields (reference frame ids are
-    # globally unique; tests/test_index_query.py multi-field invariants).
-    keys = ["doc_id"] if unit == "document" else ["doc_id", "field", "frame_seq"]
-    n_must = len(set(g for _, g, kind in rows if kind == "must"))
-
-    agg = joined.groupBy(*keys).agg(
-        F.sum(F.when(positive, contrib).otherwise(0.0)).alias("score"),
-        F.countDistinct(
-            F.when(F.col("kind") == "must", F.col("group_id"))
-        ).alias("_must_hits"),
-        F.countDistinct(
-            F.when(F.col("kind") == "nmin", F.col("group_id"))
-        ).alias("_nmin_hits"),
-        F.max(F.when(~positive, 1).otherwise(0)).alias("_excluded"),
-        F.max(F.when(positive, 1).otherwise(0)).alias("_positive"),
-    )
-
-    cond = (F.col("_excluded") == 0) & (F.col("_positive") == 1)
-    if n_must:
-        cond = cond & (F.col("_must_hits") == n_must)
-    if at_least_n:
-        cond = cond & (F.col("_nmin_hits") >= at_least_n[0])
-    return agg.where(cond).select(*keys, "score")
 
 
 def search_many(
@@ -548,129 +599,24 @@ def search_many(
     :func:`filter_frames` arguments); scorer/unit/field-scope/metadata
     are shared across the batch.  Result: one relation
     ``(query_id, <unit keys>, score)`` holding each query's top-k in
-    rank order — per-query rows identical to :func:`search`.
+    rank order — per-query rows identical to :func:`search`, which
+    runs the same scoring plan for one query.
 
     Why: the bench shows ~0.5-1 s per query is Spark job-scheduling
     latency, not scan cost (BASELINE.md).  Batching amortizes it: the
-    union of all queries' terms drives ONE broadcast join into the
-    postings scan (still bucket-pruned to the union's term buckets),
-    one partial-aggregated groupBy keyed by (query_id, unit), and one
-    per-query window top-k — a term shared by several queries is
-    scanned once.  Statistics resolve driver-side from the same
-    epoch-keyed cache the single-query path uses, so a warm batch runs
-    exactly one Spark job for Q queries.
+    union of all queries' terms drives one scan and one aggregation,
+    then a per-query window top-k.  Statistics resolve driver-side from
+    the same epoch-keyed cache the single-query path uses.
     """
     if not queries:
         raise ValueError("queries must be a non-empty {query_id: spec} dict")
-    spark = index.frames.sparkSession if isinstance(index, MemoryIndex) else index.spark
-
-    all_rows: List[Tuple[str, str, int, str]] = []
-    per_query: Dict[str, List[Tuple[str, int, str]]] = {}
-    for qid, spec in queries.items():
-        rows = _groups(
-            spec.get("must", ()),
-            spec.get("should", ()),
-            spec.get("at_least_n") or None,
-            spec.get("must_not", ()),
-        )
-        if not any(kind != "exclude" for _, _, kind in rows):
-            raise ValueError(
-                f"query {qid!r} needs at least one positive term "
-                "(must/should/at_least_n)"
-            )
-        per_query[qid] = rows
-        all_rows.extend((qid, t, g, kind) for t, g, kind in rows)
-
-    weights, n_units, avgdl = _resolve_weights(
-        index, [(t, g, kind) for _, t, g, kind in all_rows],
-        include_fields, exclude_fields, scorer,
+    qualified = _qualifying(
+        index, queries, True, unit, scorer, k1, b, metadata,
+        include_fields, exclude_fields, schema, None,
     )
-
-    empty_schema = (
-        "query_id string, doc_id long, field string, frame_seq int, score double"
-        if unit == "frame"
-        else "query_id string, doc_id long, score double"
-    )
-    live = {
-        qid: rows
-        for qid, rows in per_query.items()
-        if any(weights[t] != 0.0 for t, _, kind in rows if kind != "exclude")
-    }
-    if not live:
-        return spark.createDataFrame([], empty_schema)
-
-    qrows = []
-    for qid, rows in live.items():
-        n_must = len({g for _, g, kind in rows if kind == "must"})
-        nmin = (queries[qid].get("at_least_n") or (0, ()))[0]
-        qrows.extend(
-            (qid, t, g, kind, float(weights[t]), n_must, nmin)
-            for t, g, kind in rows
-        )
-    qdf = spark.createDataFrame(
-        qrows,
-        "query_id string, term string, group_id int, kind string, "
-        "weight double, n_must int, nmin int",
-    )
-
-    union_terms = sorted({t for _, t, _, _, _, _, _ in qrows})
-    posts = _pruned_postings(index, spark, union_terms)
-    posts = _field_scope(posts, include_fields, exclude_fields)
-    if metadata:
-        posts = posts.where(metadata_predicate(metadata, schema=schema))
-
-    joined = posts.join(F.broadcast(qdf), "term")
-
-    positive = F.col("kind") != "exclude"
-    if scorer == "bm25_doc":
-        if unit != "document":
-            raise ValueError("scorer='bm25_doc' requires unit='document'")
-        per_term = joined.groupBy(
-            "query_id", "doc_id", "term", "group_id", "kind",
-            "weight", "n_must", "nmin",
-        ).agg(F.sum("freq").alias("tf"))
-        joined = per_term.join(
-            _scoped_doc_lens(index, include_fields, exclude_fields), "doc_id"
-        )
-        contrib = F.col("weight") * (
-            F.col("tf") * (k1 + 1.0)
-        ) / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-    elif scorer == "bm25":
-        contrib = F.col("weight") * (
-            F.col("freq") * (k1 + 1.0)
-        ) / (
-            F.col("freq")
-            + k1 * (1.0 - b + b * F.col("frame_tokens") / F.lit(avgdl))
-        )
-    else:
-        contrib = F.col("freq") * F.col("weight")
-
-    keys = ["doc_id"] if unit == "document" else ["doc_id", "field", "frame_seq"]
-    agg = joined.groupBy("query_id", *keys).agg(
-        F.sum(F.when(positive, contrib).otherwise(0.0)).alias("score"),
-        F.countDistinct(
-            F.when(F.col("kind") == "must", F.col("group_id"))
-        ).alias("_must_hits"),
-        F.countDistinct(
-            F.when(F.col("kind") == "nmin", F.col("group_id"))
-        ).alias("_nmin_hits"),
-        F.max(F.when(~positive, 1).otherwise(0)).alias("_excluded"),
-        F.max(F.when(positive, 1).otherwise(0)).alias("_positive"),
-        F.max("n_must").alias("_n_must"),  # per-query constants
-        F.max("nmin").alias("_nmin"),
-    )
-    qualified = agg.where(
-        (F.col("_excluded") == 0)
-        & (F.col("_positive") == 1)
-        & (F.col("_must_hits") == F.col("_n_must"))
-        & (F.col("_nmin_hits") >= F.col("_nmin"))
-    )
-
     from pyspark.sql.window import Window
 
+    keys = _unit_keys(unit)
     order = [F.desc("score")] + [F.asc(c) for c in keys]
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
@@ -695,7 +641,7 @@ def search(
     strictly after it in rank order (reference sqlite.py:1446-1453).
     """
     res = filter_frames(index, unit=unit, **kwargs)
-    keys = ["doc_id"] if unit == "document" else ["doc_id", "field", "frame_seq"]
+    keys = _unit_keys(unit)
     if pagination:
         last_score, last_ids = pagination
         tail = F.lit(False)

@@ -288,7 +288,6 @@ def execute_query(
     from caterpillar_spark.query.engine import filter_frames
 
     spec = parse_query(q)
-    spark = index.frames.sparkSession if hasattr(index, "frames") else index.spark
     empty_schema = (
         "doc_id long, field string, frame_seq int, score double"
         if unit == "frame"
@@ -306,7 +305,7 @@ def execute_query(
     for clause in spec.must:
         grp = resolved[clause]
         if grp is None:
-            return spark.createDataFrame([], empty_schema)
+            return index.spark.createDataFrame([], empty_schema)
         must.append(grp)
     for clause in spec.should:
         grp = resolved[clause]
@@ -589,17 +588,12 @@ def execute_many(
                 "must": must, "should": should, "must_not": must_not
             }
     if not compiled:
-        spark = (
-            index.frames.sparkSession
-            if hasattr(index, "frames")
-            else index.spark
-        )
         keys = (
             "doc_id long, score double"
             if unit == "document"
             else "doc_id long, field string, frame_seq int, score double"
         )
-        return spark.createDataFrame([], f"query_id string, {keys}")
+        return index.spark.createDataFrame([], f"query_id string, {keys}")
     return search_many(
         index, compiled, k=k, unit=unit, scorer=scorer, schema=schema,
         **engine_kw,

@@ -16,15 +16,21 @@ Execution shape:
 3. rows are hash-repartitioned by ``block`` — blocks are doc-range
    aligned across terms, so all lists' fragments for one doc range land
    in one task and no doc spans two tasks;
-4. inside ``mapPartitions`` each task sorts its block groups by their
-   block-max upper bound (sum over present terms of idf*max_score_q)
-   and processes them best-first, keeping a running top-k; a group
-   whose bound is strictly below the task's current kth score is
-   skipped without decoding — the block-max WAND pruning step.  For
-   conjunctive mode a group missing any required term is skipped
-   outright (block-level intersection).  Skips are *exact*: a skipped
-   group provably cannot alter that task's top-k, and the global top-k
-   is the merge of per-task top-ks (TakeOrderedAndProject, k*P rows).
+4. inside ``mapPartitions`` each task groups its rows by block,
+   decodes each term at most once per block, and keeps a running top-k
+   per query.  A query's bound for a block sums, over its terms,
+   idf * the max ``max_score_q`` of the term's rows (an appended index
+   has one row per batch); groups run best-first by that bound, and a
+   group whose bound is strictly below the query's current kth score
+   is skipped for it without decoding — the block-max WAND pruning
+   step.  For conjunctive mode a group missing any required term is
+   skipped outright (block-level intersection).  Skips are *exact*: a
+   skipped group provably cannot alter that task's top-k.
+
+One kernel, :func:`_candidates`, does steps 1-4 for one query or many;
+two top-k stages merge its per-task top-ks: :func:`wand_topk` with
+``orderBy(score desc, doc_id asc).limit(k)`` (TakeOrderedAndProject,
+k*P rows), :func:`wand_topk_many` with a per-query window.
 
 Scoring is Okapi BM25 (k1=1.2, b=0.75 defaults, north_star) at
 document granularity: tf summed over the doc's frames, dl = doc token
@@ -161,6 +167,181 @@ def _term_doc_freqs(
     return {t: cache[t] for t in terms if cache[t] > 0}
 
 
+def _candidates(
+    index: CompressedIndex,
+    queries: dict,
+    k: int,
+    mode: str,
+    k1: float,
+    b: float,
+    num_partitions: Optional[int],
+    prune: bool,
+    metrics: Optional[dict],
+) -> Optional[DataFrame]:
+    """The block-max WAND kernel both top-k paths run.
+
+    ``queries`` maps query_id -> (terms, must_not terms).  Returns each
+    task's top-(k+32) per query as ``(query_id, doc_id, score)`` rows,
+    or None — without a Spark job — when no query can match."""
+    qterms = {
+        qid: (sorted(set(ts)), set(neg) - set(ts))
+        for qid, (ts, neg) in queries.items()
+    }
+    pos_terms = sorted({t for ts, _ in qterms.values() for t in ts})
+    neg_terms = sorted({t for _, neg in qterms.values() for t in neg})
+    sc = index.lists.sparkSession.sparkContext
+    pruned = _prune_terms(index, [*pos_terms, *neg_terms])
+    n = float(index.n_docs)
+    idf = {
+        t: float(np.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5)))
+        for t, df_t in _term_doc_freqs(index, pruned, pos_terms).items()
+    }
+    conjunctive = mode == "and"
+    # per query: (terms present in the index, excluded terms, required
+    # presence count)
+    qspec = {}
+    for qid, (ts, neg) in qterms.items():
+        present = [t for t in ts if t in idf]
+        if not present or (conjunctive and len(present) < len(ts)):
+            continue  # no term to score, or a required term is absent
+        qspec[qid] = (present, sorted(neg), len(ts) if conjunctive else 0)
+    if not qspec:
+        return None
+    needed = sorted({t for ts, neg, _ in qspec.values() for t in (*ts, *neg)})
+
+    rows = pruned.select(*_NEEDED).where(F.col("term").isin(needed))
+    # More partitions than distinct blocks is pure overhead (the
+    # repartition key is `block`), so cap at the block-space size.
+    parts = num_partitions or sc.defaultParallelism
+    if index.block_bits:
+        parts = min(parts, 2 ** index.block_bits)
+    rows = rows.repartition(parts, "block").sortWithinPartitions("block")
+
+    from caterpillar_spark.indexing.codec import decode_doc_gaps, decode_varints
+
+    avgdl = index.avgdl
+    acc_skipped = acc_scored = None
+    if metrics is not None:
+        acc_skipped = metrics["blocks_skipped"] = sc.accumulator(0)
+        acc_scored = metrics["blocks_scored"] = sc.accumulator(0)
+    emit_cap = k + 32
+
+    def docs_of(r):
+        return decode_doc_gaps(r["first_doc"], r["doc_gaps"], r["n_docs"])
+
+    def scores_of(r, w):
+        nd = r["n_docs"]
+        tf = decode_varints(r["freqs"])[:nd].astype(np.float64)
+        dl = decode_varints(r["doc_lens"])[:nd].astype(np.float64)
+        # Associate EXACTLY like the block bound (idf * stored
+        # max_score_q, i.e. w * (tf*(k1+1)/den)): IEEE rounding is
+        # monotone, so per-term contribution <= w*max_score_q holds
+        # bit-exactly and a skipped group provably cannot contain a
+        # top-k tie.  The former ((w*tf)*(k1+1))/den association could
+        # exceed the bound by 1 ulp and flip tie membership at the kth
+        # boundary (caught by scripts/blockmax_bench.py's exactness
+        # assertion on a tie-heavy corpus).
+        return w * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+
+    def score_partition(it: Iterator) -> Iterator[tuple]:
+        # by_term holds a LIST of rows per term: an incrementally
+        # appended index has one (term, block) row per batch.
+        groups: dict = {}
+        for r in it:
+            groups.setdefault(r["block"], {}).setdefault(r["term"], []).append(r)
+        # A query's block bound sums, over its terms, idf * the max
+        # max_score_q of the term's rows (each doc lives in exactly one
+        # batch row, so the max bounds every doc).  Groups go
+        # best-first by the max over queries of their bound.
+        scored: List[tuple] = []
+        for by_term in groups.values():
+            tb = {
+                t: idf[t] * max(r["max_score_q"] for r in rs)
+                for t, rs in by_term.items() if t in idf
+            }
+            bounds = {}
+            for qid, (terms, _, _) in qspec.items():
+                if conjunctive and any(t not in by_term for t in terms):
+                    continue  # block-level intersection miss
+                bound = sum(tb.get(t, 0.0) for t in terms)
+                if bound > 0.0:
+                    bounds[qid] = bound
+            if bounds:
+                scored.append((max(bounds.values()), by_term, bounds))
+        scored.sort(key=lambda x: -x[0])
+
+        heaps = {qid: [] for qid in qspec}  # min-heaps of the k best scores
+        # Bounded emit heaps: top-(k+32) of (score, -doc_id) — a broad
+        # query scores O(docs-in-partition) candidates, but only this
+        # many tuples ever live in Python memory per task and query.
+        emits = {qid: [] for qid in qspec}
+        for _, by_term, bounds in scored:
+            active = [
+                qid for qid, bound in bounds.items()
+                if not (prune and len(heaps[qid]) == k and bound < heaps[qid][0])
+            ]
+            if not active:
+                # block-max skip: no query can beat its current top-k
+                if acc_skipped is not None:
+                    acc_skipped.add(1)
+                continue
+            if acc_scored is not None:
+                acc_scored.add(1)
+            # decode each needed term ONCE per block, share across queries
+            decoded = {
+                t: (
+                    np.concatenate([docs_of(r) for r in by_term[t]]),
+                    np.concatenate([scores_of(r, idf[t]) for r in by_term[t]]),
+                )
+                for t in {t for q in active for t in qspec[q][0]}
+                if t in by_term
+            }
+            excluded = {
+                t: np.concatenate([docs_of(r) for r in by_term[t]])
+                for t in {t for q in active for t in qspec[q][1]}
+                if t in by_term
+            }
+            for qid in active:
+                terms, neg, nreq = qspec[qid]
+                present = [t for t in terms if t in decoded]
+                uniq, inv = np.unique(
+                    np.concatenate([decoded[t][0] for t in present]),
+                    return_inverse=True,
+                )
+                sums = np.bincount(
+                    inv, weights=np.concatenate([decoded[t][1] for t in present])
+                )
+                if conjunctive:
+                    keep = np.bincount(inv) == nreq
+                    uniq, sums = uniq[keep], sums[keep]
+                drop = [excluded[t] for t in neg if t in excluded]
+                if drop and uniq.size:
+                    keep = ~np.isin(uniq, np.concatenate(drop))
+                    uniq, sums = uniq[keep], sums[keep]
+                heap, emit = heaps[qid], emits[qid]
+                for d, s in zip(uniq, sums):
+                    fs, fd = float(s), int(d)
+                    if len(heap) < k:
+                        heapq.heappush(heap, fs)
+                    elif fs > heap[0]:
+                        heapq.heapreplace(heap, fs)
+                    # (score, -doc_id) min-heap: evicts the lowest score,
+                    # largest doc_id first — matching the final
+                    # (score desc, doc_id asc) order.
+                    if len(emit) < emit_cap:
+                        heapq.heappush(emit, (fs, -fd))
+                    elif (fs, -fd) > emit[0]:
+                        heapq.heapreplace(emit, (fs, -fd))
+        for qid, emit in emits.items():
+            for s, nd in sorted(emit, key=lambda x: (-x[0], -x[1])):
+                yield (qid, -nd, s)
+
+    return index.lists.sparkSession.createDataFrame(
+        rows.rdd.mapPartitions(score_partition),
+        "query_id string, doc_id long, score double",
+    )
+
+
 def wand_topk(
     index: CompressedIndex,
     terms: Sequence[str],
@@ -185,136 +366,24 @@ def wand_topk(
     measurement compares against (scripts/blockmax_bench.py).
     ``metrics`` (a dict) receives two Spark accumulators,
     ``blocks_skipped`` / ``blocks_scored``, populated when the query's
-    action runs — the observable evidence that the skip step fires."""
-    terms = sorted(set(terms))
-    neg_terms = sorted(set(must_not) - set(terms))
-    spark = index.lists.sparkSession
-    pruned = _prune_terms(index, [*terms, *neg_terms])
-
-    stats = _term_doc_freqs(index, pruned, terms)
-    n = float(index.n_docs)
-    idf = {
-        t: float(np.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5)))
-        for t, df_t in stats.items()
-    }
-    if not idf:
-        return spark.createDataFrame([], "doc_id long, score double")
-    avgdl = index.avgdl
-    conjunctive = mode == "and"
-    n_terms_required = len(terms) if conjunctive else 0
-    if conjunctive and len(idf) < len(terms):
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    rows = pruned.select(*_NEEDED)
-    # More partitions than distinct blocks is pure overhead (the
-    # repartition key is `block`), so cap at the block-space size.
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    if index.block_bits:
-        parts = min(parts, 2 ** index.block_bits)
-    rows = rows.repartition(parts, "block").sortWithinPartitions("block")
-
-    from caterpillar_spark.indexing.codec import decode_doc_gaps, decode_varints
-
-    neg = set(neg_terms)
-    acc_skipped = acc_scored = None
-    if metrics is not None:
-        acc_skipped = spark.sparkContext.accumulator(0)
-        acc_scored = spark.sparkContext.accumulator(0)
-        metrics["blocks_skipped"] = acc_skipped
-        metrics["blocks_scored"] = acc_scored
-
-    def score_partition(it: Iterator) -> Iterator[tuple]:
-        groups: dict = {}
-        neg_groups: dict = {}
-        for r in it:
-            if r["term"] in neg:
-                neg_groups.setdefault(r["block"], []).append(r)
-            else:
-                groups.setdefault(r["block"], []).append(r)
-        if not groups:
-            return
-        scored: List[tuple] = []
-        for block, rs in groups.items():
-            bound = sum(idf[r["term"]] * r["max_score_q"] for r in rs)
-            scored.append((bound, block, rs))
-        scored.sort(key=lambda x: -x[0])
-
-        heap: List[float] = []  # min-heap of the k best scores seen
-        # Bounded emit heap: top-(k+32) of (score, -doc_id) — a broad
-        # query scores O(docs-in-partition) candidates, but only this
-        # many tuples ever live in Python memory per task.
-        emit_cap = k + 32
-        emit: List[tuple] = []
-        for bound, block, rs in scored:
-            if conjunctive and len(rs) < n_terms_required:
-                continue  # a required term has no postings in this range
-            if prune and len(heap) == k and bound < heap[0]:
-                # block-max skip: cannot beat current top-k
-                if acc_skipped is not None:
-                    acc_skipped.add(1)
-                continue
-            if acc_scored is not None:
-                acc_scored.add(1)
-            excluded = None
-            if block in neg_groups:
-                excl_parts = [
-                    decode_doc_gaps(r["first_doc"], r["doc_gaps"], r["n_docs"])
-                    for r in neg_groups[block]
-                ]
-                excluded = np.concatenate(excl_parts)
-            doc_parts, score_parts = [], []
-            for r in rs:
-                nd = r["n_docs"]
-                docs = decode_doc_gaps(r["first_doc"], r["doc_gaps"], nd)
-                tf = decode_varints(r["freqs"])[:nd].astype(np.float64)
-                dl = decode_varints(r["doc_lens"])[:nd].astype(np.float64)
-                w = idf[r["term"]]
-                # Associate EXACTLY like the block bound (idf * stored
-                # max_score_q, i.e. w * (tf*(k1+1)/den)): IEEE rounding
-                # is monotone, so per-term contribution <= w*max_score_q
-                # holds bit-exactly and a skipped group provably cannot
-                # contain a top-k tie.  The former ((w*tf)*(k1+1))/den
-                # association could exceed the bound by 1 ulp and flip
-                # tie membership at the kth boundary (caught by
-                # scripts/blockmax_bench.py's exactness assertion on a
-                # tie-heavy corpus).
-                s = w * (
-                    tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                )
-                doc_parts.append(docs)
-                score_parts.append(s)
-            all_docs = np.concatenate(doc_parts)
-            all_scores = np.concatenate(score_parts)
-            uniq, inv = np.unique(all_docs, return_inverse=True)
-            sums = np.bincount(inv, weights=all_scores)
-            if conjunctive:
-                counts = np.bincount(inv)
-                keep = counts == n_terms_required
-                uniq, sums = uniq[keep], sums[keep]
-            if excluded is not None and uniq.size:
-                keep = ~np.isin(uniq, excluded)
-                uniq, sums = uniq[keep], sums[keep]
-            for d, s in zip(uniq, sums):
-                fs, fd = float(s), int(d)
-                if len(heap) < k:
-                    heapq.heappush(heap, fs)
-                elif fs > heap[0]:
-                    heapq.heapreplace(heap, fs)
-                # (score, -doc_id) min-heap: evicts the lowest score,
-                # largest doc_id first — matching the final
-                # (score desc, doc_id asc) order.
-                if len(emit) < emit_cap:
-                    heapq.heappush(emit, (fs, -fd))
-                elif (fs, -fd) > emit[0]:
-                    heapq.heapreplace(emit, (fs, -fd))
-        # per-task top-(k+32), rank order
-        for s, nd in sorted(emit, key=lambda x: (-x[0], -x[1])):
-            yield (-nd, s)
-
-    out = spark.createDataFrame(
-        rows.rdd.mapPartitions(score_partition), "doc_id long, score double"
+    action runs — the observable evidence that the skip step fires.
+    A group that cannot hold a match (no query term, or in ``and``
+    mode a term missing from its doc range) counts as neither."""
+    out = _candidates(
+        index, {"q": (terms, must_not)}, k, mode, k1, b,
+        num_partitions, prune, metrics,
     )
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    if out is None:
+        return index.lists.sparkSession.createDataFrame(
+            [], "doc_id long, score double"
+        )
+    # global top-k = the merge of the per-task top-ks
+    # (TakeOrderedAndProject over k*P rows)
+    return (
+        out.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def wand_topk_many(
@@ -329,11 +398,11 @@ def wand_topk_many(
     metrics: Optional[dict] = None,
 ) -> DataFrame:
     """BM25 top-k for Q queries in ONE Spark job over the compressed
-    index — per-query results identical to :func:`wand_topk`.
+    index — per-query results identical to :func:`wand_topk`, which
+    runs the same kernel for one query.
 
-    ``queries`` maps query_id -> term list; ``mode`` is shared
-    (``must_not`` is single-query-path only).  Result:
-    ``(query_id, doc_id, score)``, each query's exact top-k.
+    ``queries`` maps query_id -> term list; ``mode`` is shared.
+    Result: ``(query_id, doc_id, score)``, each query's exact top-k.
 
     Why: per-query wall clock is dominated by Spark job scheduling
     (~0.5-1 s, BASELINE.md), not scan work.  Here the union of all
@@ -343,156 +412,17 @@ def wand_topk_many(
     plus the incremental per-query numpy aggregation.  Block-max
     pruning stays per-query exact: a block group is decoded iff at
     least one query's bound beats that query's running kth score
-    (``metrics['blocks_skipped']`` counts groups no query needed).
+    (``metrics['blocks_skipped']`` counts the groups some query could
+    match in but none needed).
     """
-    qterms = {qid: sorted(set(ts)) for qid, ts in queries.items()}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    spark = index.lists.sparkSession
-    if not all_terms or not qterms:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double"
-        )
-    pruned = _prune_terms(index, all_terms)
-    stats = _term_doc_freqs(index, pruned, all_terms)
-    n = float(index.n_docs)
-    idf = {
-        t: float(np.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5)))
-        for t, df_t in stats.items()
-    }
-    conjunctive = mode == "and"
-    # per query: (terms present in the index, required presence count)
-    qspec = {}
-    for qid, ts in qterms.items():
-        present = [t for t in ts if t in idf]
-        if not present:
-            continue
-        if conjunctive and len(present) < len(ts):
-            continue  # a required term is absent from the corpus
-        qspec[qid] = (present, len(ts) if conjunctive else 0)
-    if not qspec:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double"
-        )
-    needed_terms = sorted({t for terms, _ in qspec.values() for t in terms})
-
-    rows = pruned.select(*_NEEDED).where(F.col("term").isin(needed_terms))
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    if index.block_bits:
-        parts = min(parts, 2 ** index.block_bits)
-    rows = rows.repartition(parts, "block").sortWithinPartitions("block")
-
-    from caterpillar_spark.indexing.codec import decode_doc_gaps, decode_varints
-
-    avgdl = index.avgdl
-    acc_skipped = acc_scored = None
-    if metrics is not None:
-        acc_skipped = spark.sparkContext.accumulator(0)
-        acc_scored = spark.sparkContext.accumulator(0)
-        metrics["blocks_skipped"] = acc_skipped
-        metrics["blocks_scored"] = acc_scored
-    emit_cap = k + 32
-
-    def score_partition(it: Iterator) -> Iterator[tuple]:
-        # by_term holds a LIST of rows per term: an incrementally
-        # appended index has one (term, block) row per batch.
-        groups: dict = {}
-        for r in it:
-            groups.setdefault(r["block"], {}).setdefault(r["term"], []).append(r)
-        if not groups:
-            return
-        # best-first by the max over queries of the block's query bound;
-        # per-term bound = idf * max over the term's rows (each doc
-        # lives in exactly one batch row, so the max bounds every doc)
-        scored: List[tuple] = []
-        for block, by_term in groups.items():
-            tb = {
-                t: idf[t] * max(r["max_score_q"] for r in rs)
-                for t, rs in by_term.items()
-            }
-            bounds = {
-                qid: sum(tb.get(t, 0.0) for t in terms)
-                for qid, (terms, _) in qspec.items()
-            }
-            scored.append((max(bounds.values()), block, by_term, bounds))
-        scored.sort(key=lambda x: -x[0])
-
-        heaps = {qid: [] for qid in qspec}
-        emits = {qid: [] for qid in qspec}
-        for _, block, by_term, bounds in scored:
-            active = []
-            for qid, (terms, nreq) in qspec.items():
-                if bounds[qid] <= 0.0:
-                    continue  # no query term in this doc range
-                if conjunctive and any(t not in by_term for t in terms):
-                    continue  # block-level intersection miss
-                h = heaps[qid]
-                if prune and len(h) == k and bounds[qid] < h[0]:
-                    continue  # block-max skip for this query
-                active.append((qid, terms, nreq))
-            if not active:
-                if acc_skipped is not None:
-                    acc_skipped.add(1)
-                continue
-            if acc_scored is not None:
-                acc_scored.add(1)
-            # decode each needed term ONCE per block, share across queries
-            decoded: dict = {}
-            for t in {t for _, terms, _ in active for t in terms}:
-                rs = by_term.get(t)
-                if not rs:
-                    continue
-                d_parts, s_parts = [], []
-                w = idf[t]
-                for r in rs:
-                    nd = r["n_docs"]
-                    d_parts.append(
-                        decode_doc_gaps(r["first_doc"], r["doc_gaps"], nd)
-                    )
-                    tf = decode_varints(r["freqs"])[:nd].astype(np.float64)
-                    dl = decode_varints(r["doc_lens"])[:nd].astype(np.float64)
-                    # same exact association as wand_topk: contribution
-                    # is bounded by idf*max_score_q bit-exactly
-                    s_parts.append(
-                        w * (
-                            tf * (k1 + 1.0)
-                            / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                        )
-                    )
-                decoded[t] = (
-                    np.concatenate(d_parts), np.concatenate(s_parts)
-                )
-            for qid, terms, nreq in active:
-                parts_d = [decoded[t][0] for t in terms if t in decoded]
-                parts_s = [decoded[t][1] for t in terms if t in decoded]
-                if not parts_d:
-                    continue
-                all_docs = np.concatenate(parts_d)
-                all_scores = np.concatenate(parts_s)
-                uniq, inv = np.unique(all_docs, return_inverse=True)
-                sums = np.bincount(inv, weights=all_scores)
-                if conjunctive:
-                    counts = np.bincount(inv)
-                    keep = counts == nreq
-                    uniq, sums = uniq[keep], sums[keep]
-                heap, emit = heaps[qid], emits[qid]
-                for d, s in zip(uniq, sums):
-                    fs, fd = float(s), int(d)
-                    if len(heap) < k:
-                        heapq.heappush(heap, fs)
-                    elif fs > heap[0]:
-                        heapq.heapreplace(heap, fs)
-                    if len(emit) < emit_cap:
-                        heapq.heappush(emit, (fs, -fd))
-                    elif (fs, -fd) > emit[0]:
-                        heapq.heapreplace(emit, (fs, -fd))
-        for qid, emit in emits.items():
-            for s, nd in sorted(emit, key=lambda x: (-x[0], -x[1])):
-                yield (qid, -nd, s)
-
-    out = spark.createDataFrame(
-        rows.rdd.mapPartitions(score_partition),
-        "query_id string, doc_id long, score double",
+    out = _candidates(
+        index, {qid: (ts, ()) for qid, ts in queries.items()}, k, mode,
+        k1, b, num_partitions, prune, metrics,
     )
+    if out is None:
+        return index.lists.sparkSession.createDataFrame(
+            [], "query_id string, doc_id long, score double"
+        )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(

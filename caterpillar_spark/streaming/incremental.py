@@ -42,6 +42,7 @@ import os
 import time
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from caterpillar_spark.indexing.build import (
@@ -163,8 +164,10 @@ def _append_batch_locked(
 
     # Persist before the duplicate probe, the batch's first action, so
     # the framing UDF runs once per batch rather than once for the
-    # probe and again for the writes.
-    cached = [frames.persist()]
+    # probe and again for the writes.  Only what this call persisted is
+    # unpersisted: the caller's cached frames stay cached.
+    owned = frames.storageLevel == StorageLevel.NONE
+    cached = [frames.persist()] if owned else []
     try:
         if on_existing != "allow" and os.path.isdir(docs_path):
             new_ids = frames.select("doc_id").distinct()

@@ -3,6 +3,13 @@ Spark job must return per-query results IDENTICAL to the single-query
 paths for both the DataFrame engine (search_many) and the
 compressed-index WAND kernel (wand_topk_many).
 
+Each engine has one scoring kernel, and the single-query entry points
+(search, wand_topk) are thin wrappers that run it for one query with
+their own ``orderBy(...).limit(k)`` top-k, where the batch paths rank
+per query in a window.  The parity tests here therefore cover the two
+top-k stages and the wrappers (argument checks, must_not, conjunctive
+mode on an appended index), not two copies of the scoring.
+
 Tie note: multi-term scores are float SUMS whose addend order differs
 between plans (and between runs of the same plan), so docs tied at
 rounded precision can swap at a small-k boundary without any semantic
@@ -148,3 +155,58 @@ def test_wand_topk_many_prune_exact(cindex):
         (r["query_id"], r["doc_id"], round(r["score"], 9)) for r in rows
     )
     assert norm(pruned) == norm(exhaustive)
+
+
+def test_search_many_checks_field_scope_against_schema(index):
+    """Both top-k stages share one plan builder, so the batch path
+    rejects a scoped field the schema does not declare, as the
+    single-query path does."""
+    from caterpillar_spark.schema import TEXT, Schema, UnknownFieldError
+
+    sch = Schema(text=TEXT)
+    with pytest.raises(UnknownFieldError):
+        search_many(index, SPECS, schema=sch, include_fields=["nope"])
+    with pytest.raises(UnknownFieldError):
+        search(index, should=["spark"], schema=sch, exclude_fields=["nope"])
+
+
+def test_wand_and_must_not_exact_over_appended_batches(spark, tmp_path):
+    """On an index written by two append_batch calls a (term, block)
+    has one row per batch, so the kernel's block bound takes the max
+    over a term's rows and its conjunctive skip checks each term.
+    Pruned conjunctive top-k with exclusions equals the exhaustive
+    run at every depth."""
+    from caterpillar_spark.sources import ingest_webtext, synthetic_webtext
+    from caterpillar_spark.streaming.incremental import append_batch
+
+    # hashed doc_ids spread over every doc-range block
+    docs = ingest_webtext(synthetic_webtext(spark, 300, seed=11))
+    frames = build_frames(docs, metadata_cols=["lang"]).persist()
+    path = str(tmp_path / "two_batches")
+    for parity in (0, 1):
+        idx = append_batch(
+            frames.where(F.abs(F.col("doc_id")) % 2 == parity), path,
+            num_buckets=8, block_bits=3,
+        )
+    ci = idx.compressed()
+    multi = (
+        ci.lists.groupBy("term", "block").count().where(F.col("count") > 1)
+    )
+    assert multi.count() > 0
+
+    q = dict(terms=["the", "spark"], mode="and", must_not=["data"])
+    rows = lambda df: [(r["doc_id"], r["score"]) for r in df.collect()]
+    exhaustive = rows(wand_topk(ci, k=DEEP_K, prune=False, **q))
+    excluded = {
+        r["doc_id"] for r in MemoryIndex(frames).postings()
+        .where(F.col("term") == "data").select("doc_id").collect()
+    }
+    unfiltered = rows(wand_topk(ci, ["the", "spark"], k=DEEP_K, mode="and"))
+    assert exhaustive and len(unfiltered) > len(exhaustive)
+    assert not excluded & {d for d, _ in exhaustive}
+    for k in (1, 3, DEEP_K):
+        metrics = {}
+        assert rows(wand_topk(ci, k=k, metrics=metrics, **q)) == exhaustive[:k]
+        if k == 1:  # the max-per-term bound lets blocks be skipped
+            assert metrics["blocks_skipped"].value > 0
+    frames.unpersist()

@@ -104,3 +104,17 @@ def test_parse_robots_bom(spark):
         [("c.org", bom_txt)], "host string, robots_txt string"))
     got = {(r.agent, r.allow, r.prefix) for r in rules.collect()}
     assert ("*", False, "/x") in got
+
+
+@pytest.mark.parametrize(
+    "col", ["_host", "_path", "_rn", "_r_host", "_r_allow", "_r_prefix"]
+)
+def test_robots_filter_rejects_reserved_columns(spark, rules, col):
+    """Every helper column robots_filter adds beside the caller's
+    columns is reserved: a caller column of the same name would be
+    shadowed or made ambiguous in the decision join."""
+    urls = spark.createDataFrame(
+        [("https://a.org/private/x", 1)], f"url string, {col} int"
+    )
+    with pytest.raises(ValueError, match="reserves the column name"):
+        robots_filter(urls, rules, agent="goodbot")

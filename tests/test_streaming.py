@@ -240,6 +240,26 @@ def test_append_backfills_missing_docs_ledger(spark, tmp_path):
     frames.unpersist()
 
 
+def test_append_keeps_caller_persisted_frames(spark, tmp_path):
+    """append_batch persists the frames it reads several times, but
+    frames the caller persisted stay persisted afterwards: unpersisting
+    them would make the caller's next action run the framing UDF
+    again."""
+    docs = ingest_webtext(synthetic_webtext(spark, 20, seed=41))
+    frames = build_frames(docs, metadata_cols=["lang"])
+    path = str(tmp_path / "idx")
+    first = frames.where(F.col("doc_id") % 2 == 0).persist()
+    first.count()
+    append_batch(first, path, num_buckets=4)
+    assert first.is_cached
+    # a partly duplicate batch: the filtered frames this call persists
+    # are released, the caller's stay
+    append_batch(frames.persist(), path)
+    assert frames.is_cached
+    for df in (first, frames):
+        df.unpersist()
+
+
 def test_windowed_event_counts_batch_vs_manual(spark):
     """Event-time tumbling windows on the events table: the windowed
     plan equals a manual date_trunc aggregation (batch path; the same
