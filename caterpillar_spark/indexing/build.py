@@ -153,6 +153,46 @@ def atomic_write_json(path: str, obj, **dump_kw) -> None:
         os.close(fd)
 
 
+def _handle_cache(index, attr: str) -> dict:
+    """Memoization store scoped to (index handle, cache epoch).
+
+    ``cache_epoch()`` (InvertedIndex: the manifest revision, one cheap
+    local JSON read per query) moves when the on-disk index changes —
+    ``append_batch`` / ``delete_documents`` bump the revision — so a
+    handle retained across an append drops its stale table schemas,
+    term statistics and corpus constants instead of scoring new
+    postings with old df/N (the r3 advisory: missing terms were cached
+    as None forever).  Handles without an epoch (MemoryIndex,
+    CompressedIndex over a pinned file listing) get a constant ``None``
+    epoch — the immutable-by-convention behavior, unchanged."""
+    epoch = getattr(index, "cache_epoch", lambda: None)()
+    store = getattr(index, attr, None)
+    if store is None or store[0] != epoch:
+        store = (epoch, {})
+        try:
+            object.__setattr__(index, attr, store)
+        except (AttributeError, TypeError):
+            pass
+    return store[1]
+
+
+def _local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-side relation (``rows`` of tuples in ``ddl``
+    column order) built from an Arrow table, so it plans as a JVM
+    ``LocalTableScan``.  ``spark.createDataFrame(list)`` plans as an
+    RDD scan instead, and every query that reads it pays a round trip
+    through a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def postings_with_bucket(postings: DataFrame, num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     return postings.withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
@@ -271,13 +311,26 @@ class InvertedIndex:
                     raise
         return p
 
+    def _read(self, name: str) -> DataFrame:
+        """Open table ``name``.  Its schema is memoized per manifest
+        revision: inferring it runs a Spark job that reads a parquet
+        footer, once per open.  The files are still listed on every
+        open, so a directory swap or an append is always seen."""
+        path = self._table(name)
+        schemas = _handle_cache(self, "_schema_cache")
+        if name in schemas:
+            return self.spark.read.schema(schemas[name]).parquet(path)
+        df = self.spark.read.parquet(path)
+        schemas[name] = df.schema
+        return df
+
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self._table("postings"))
+        return self._read("postings")
 
     def docs(self) -> DataFrame:
         """Per-document ledger (doc_id, dl) — doc_id-sorted parquet, the
         membership/length table incremental appends guard against."""
-        return self.spark.read.parquet(self._table("docs"))
+        return self._read("docs")
 
     def has_doc_fields(self) -> bool:
         return os.path.isdir(os.path.join(self.path, "doc_fields")) or (
@@ -289,7 +342,7 @@ class InvertedIndex:
         token_count).  Carries frames whose tokens were ALL stop-marked
         (they have no postings), so field statistics survive deletes
         exactly — closing the documented pseudo-frame deviation (r5)."""
-        return self.spark.read.parquet(self._table("doc_fields"))
+        return self._read("doc_fields")
 
     def doc_lens(self) -> DataFrame:
         """(doc_id, dl) for document-level scoring — the docs ledger."""
@@ -299,7 +352,7 @@ class InvertedIndex:
         """Persisted frame attributes (doc_id, frame_seq, type, value) —
         the reference's attribute/frame_attribute_posting tables
         (_sqlite_v0_10_0_schema.py:145-203)."""
-        return self.spark.read.parquet(self._table("attributes"))
+        return self._read("attributes")
 
     def stored_documents(self) -> DataFrame:
         """The source document table this index was built from (the
@@ -324,7 +377,7 @@ class InvertedIndex:
         """Doc-major posting copy (fwd_bucket, doc_id, field, frame_seq,
         term, freq) — built ``with_forward=True``.  Per-document reads
         go through :meth:`doc_forward`, which prunes to one bucket."""
-        return self.spark.read.parquet(self._table("forward"))
+        return self._read("forward")
 
     def doc_forward(self, doc_id: int) -> DataFrame:
         """One document's forward rows: fwd_bucket partition pruning
@@ -338,24 +391,24 @@ class InvertedIndex:
         return fwd.where(F.col("doc_id") == doc_id)
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self._table("term_stats"))
+        return self._read("term_stats")
 
     def field_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self._table("field_stats"))
+        return self._read("field_stats")
 
     def num_buckets(self) -> int:
         return self.manifest["num_buckets"]
 
     def lists(self) -> DataFrame:
         """Compressed posting-list block rows (postinglists.py layout)."""
-        return self.spark.read.parquet(self._table("lists"))
+        return self._read("lists")
 
     def position_lists(self) -> DataFrame:
         """Compressed position rows (POSITION_LIST_SCHEMA) — present
         when the index was built ``with_positions=True``; phrase/ngram
         search runs over this instead of the raw postings
         (query/phrase.py)."""
-        return self.spark.read.parquet(self._table("positions"))
+        return self._read("positions")
 
     def compressed(self):
         """CompressedIndex view for the WAND query engine."""
@@ -830,7 +883,7 @@ def _delete_documents_locked(index: InvertedIndex, doc_ids) -> InvertedIndex:
     spark = index.spark
     manifest = index.manifest
     doc_ids = [int(d) for d in doc_ids]
-    ids_df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id long")
+    ids_df = _local_frame(spark, [(d,) for d in doc_ids], "doc_id long")
     remaining = index.postings().join(
         F.broadcast(ids_df), "doc_id", "left_anti"
     )

@@ -273,7 +273,9 @@ def pagerank(
     shuffle (contributions hash-keyed by dst) plus a broadcast of the
     two O(1) scalars (dangling mass via one aggregate).  Ranks are
     ``localCheckpoint``-ed per round to truncate lineage (same
-    discipline as near_dup_clusters).  Fixed iteration count keeps the
+    discipline as near_dup_clusters), and each round frees the
+    previous round's checkpoint, so block storage stays flat in
+    ``iterations``.  Fixed iteration count keeps the
     result a pure function of the input — resume/backfill stable, and
     exactly reproducible by the unrolled-SQL oracle.
 
@@ -380,6 +382,8 @@ def pagerank(
         ranks = nodes_v.select("host", F.col("_v").alias("rank"))
     else:
         ranks = nodes.select("host", F.lit(1.0 / n).alias("rank"))
+    # the previous round's checkpoint, freed once the next one is built
+    held = ranks if init_ranks is not None else None
     for _ in range(iterations):
         dm = 0.0
         if n_dangling:
@@ -422,6 +426,7 @@ def pagerank(
                 )
                 .localCheckpoint()
             )
+        converged = False
         if tol is not None:
             delta = (
                 ranks.join(
@@ -431,11 +436,22 @@ def pagerank(
                 .collect()[0][0]
                 or 0.0
             )
-            if delta < tol:
-                break
+            converged = delta < tol
+        if held is not None:
+            _drop_checkpoint(held)
+        held = ranks
+        if converged:
+            break
     trans.unpersist()
     dangling_nodes.unpersist()
     return ranks
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint()``-ed DataFrame (its
+    plan is the checkpointed RDD).  Nothing may read ``df`` afterwards:
+    a local checkpoint cannot be recomputed."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def hits(
@@ -458,7 +474,8 @@ def hits(
     Execution shape mirrors :func:`pagerank`: the edge relation is
     persisted once; each half-step is one shuffle (keyed by the side
     being updated) plus one O(1) norm scalar; both score vectors are
-    ``localCheckpoint``-ed per round to truncate lineage.  Fixed
+    ``localCheckpoint``-ed per round to truncate lineage, and the
+    previous round's checkpoints freed.  Fixed
     iteration count keeps the result a pure function of the input —
     reproducible by the unrolled-SQL oracle.
     """
@@ -487,6 +504,8 @@ def hits(
 
     hub = nodes.select("host", F.lit(1.0).alias("s"))
     auth = nodes.select("host", F.lit(1.0).alias("s"))
+    # the previous round's checkpoints, freed once the next ones are built
+    held_hub = held_auth = None
     for _ in range(iterations):
         raw_a = (
             e.join(hub, e["src"] == hub["host"])
@@ -503,6 +522,9 @@ def hits(
             .select("host", F.coalesce("c", F.lit(0.0)).alias("s"))
             .localCheckpoint()
         )
+        if held_auth is not None:
+            _drop_checkpoint(held_auth)
+        held_auth = auth
         na = auth.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))).collect()[0][0]
         if na:
             auth = auth.select("host", (F.col("s") / F.lit(na)).alias("s"))
@@ -517,6 +539,9 @@ def hits(
             .select("host", F.coalesce("c", F.lit(0.0)).alias("s"))
             .localCheckpoint()
         )
+        if held_hub is not None:
+            _drop_checkpoint(held_hub)
+        held_hub = hub
         nh = hub.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))).collect()[0][0]
         if nh:
             hub = hub.select("host", (F.col("s") / F.lit(nh)).alias("s"))

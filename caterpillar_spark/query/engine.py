@@ -72,6 +72,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from caterpillar_spark.framing import frames_to_postings
 from caterpillar_spark.indexing.build import (
+    _handle_cache,
+    _local_frame,
     field_statistics,
     term_statistics,
 )
@@ -139,29 +141,6 @@ def _groups(
         rows.extend((v, gid, "exclude") for v in variants)
         gid += 1
     return rows
-
-
-def _handle_cache(index, attr: str) -> dict:
-    """Memoization store scoped to (index handle, cache epoch).
-
-    ``cache_epoch()`` (InvertedIndex: the manifest revision, one cheap
-    local JSON read per query) moves when the on-disk index changes —
-    ``append_batch`` / ``delete_documents`` bump the revision — so a
-    handle retained across an append drops its stale term statistics
-    and corpus constants instead of scoring new postings with old df/N
-    (the r3 advisory: missing terms were cached as None forever).
-    Handles without an epoch (MemoryIndex, CompressedIndex over a
-    pinned file listing) get a constant ``None`` epoch — the
-    immutable-by-convention behavior, unchanged."""
-    epoch = getattr(index, "cache_epoch", lambda: None)()
-    store = getattr(index, attr, None)
-    if store is None or store[0] != epoch:
-        store = (epoch, {})
-        try:
-            object.__setattr__(index, attr, store)
-        except (AttributeError, TypeError):
-            pass
-    return store[1]
 
 
 def _field_scope(df: DataFrame, include_fields, exclude_fields) -> DataFrame:
@@ -258,19 +237,22 @@ def _scoped_doc_lens(index, include_fields, exclude_fields) -> DataFrame:
     )
 
 
-def _pruned_postings(index, terms: Sequence[str]) -> DataFrame:
-    """Postings scan pruned to the query terms: term-bucket partition
-    pruning (buckets computed driver-side, no Spark job) + a literal
-    ``isin`` predicate that parquet row-group min/max stats use because
-    files are term-sorted."""
-    posts = index.postings()
+def _pruned(index, table: DataFrame, terms: Sequence[str]) -> DataFrame:
+    """A term-major table's scan pruned to ``terms``: term-bucket
+    partition pruning (buckets computed driver-side, no Spark job) + a
+    literal ``isin`` predicate that parquet row-group min/max stats use
+    because files are term-sorted."""
     nb = index.num_buckets()
     if nb:
         from caterpillar_spark.functions.hashing import spark_xxhash64
 
         buckets = sorted({spark_xxhash64(t) % nb for t in terms})
-        posts = posts.where(F.col("term_bucket").isin(buckets))
-    return posts.where(F.col("term").isin(list(terms)))
+        table = table.where(F.col("term_bucket").isin(buckets))
+    return table.where(F.col("term").isin(list(terms)))
+
+
+def _pruned_postings(index, terms: Sequence[str]) -> DataFrame:
+    return _pruned(index, index.postings(), terms)
 
 
 def _resolve_weights(
@@ -325,15 +307,18 @@ def _resolve_weights(
                 .collect()
             )
         else:
-            stats = _field_scope(index.term_stats(), include_fields, exclude_fields)
-            stat_col = "docs_occuring" if doc_mode else "frames_occuring"
-            rows = (
-                stats.where(F.col("term").isin(lookup))
-                .groupBy("term")
-                .agg(F.sum(stat_col).alias("ff"))
-                .collect()
+            # One row per (term, field) and per appended batch: few
+            # enough to sum on the driver, which saves the shuffle job
+            # a groupBy would add.
+            stats = _field_scope(
+                _pruned(index, index.term_stats(), lookup),
+                include_fields, exclude_fields,
             )
-        found = {r["term"]: r["ff"] for r in rows}
+            stat_col = "docs_occuring" if doc_mode else "frames_occuring"
+            rows = stats.select("term", F.col(stat_col).alias("ff")).collect()
+        found: Dict[str, int] = {}
+        for r in rows:
+            found[r["term"]] = found.get(r["term"], 0) + r["ff"]
         for t in lookup:
             ff_cache[(scope, t)] = found.get(t)
     ff = {
@@ -472,8 +457,9 @@ def _qualifying(
     if not qrows:
         empty = ("query_id string, " if batch else "") + "doc_id long" + (
             "" if unit == "document" else ", field string, frame_seq int")
-        return index.spark.createDataFrame([], empty + ", score double")
-    qdf = index.spark.createDataFrame(
+        return _local_frame(index.spark, [], empty + ", score double")
+    qdf = _local_frame(
+        index.spark,
         qrows,
         "query_id string, term string, group_id int, kind string, "
         "weight double, n_must int, nmin int",
@@ -602,11 +588,13 @@ def search_many(
     rank order — per-query rows identical to :func:`search`, which
     runs the same scoring plan for one query.
 
-    Why: the bench shows ~0.5-1 s per query is Spark job-scheduling
-    latency, not scan cost (BASELINE.md).  Batching amortizes it: the
-    union of all queries' terms drives one scan and one aggregation,
-    then a per-query window top-k.  Statistics resolve driver-side from
-    the same epoch-keyed cache the single-query path uses.
+    Why: at small scale a warm query's wall clock is a fixed cost per
+    Spark job it launches, not scan work (BASELINE.md, "Where a warm
+    DataFrame-engine query's time went").  Batching pays that cost once
+    for Q queries: the union of all queries' terms drives one scan and
+    one aggregation, then a per-query window top-k.  Statistics resolve
+    driver-side from the same epoch-keyed cache the single-query path
+    uses.
     """
     if not queries:
         raise ValueError("queries must be a non-empty {query_id: spec} dict")

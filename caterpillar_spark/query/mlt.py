@@ -30,7 +30,7 @@ def mlt_seed_terms(
     """The seed document's top ``max_terms`` terms by tf·idf
     (idf = 1 + ln(N/(df+1)), the engine's tfidf weight), tie-broken by
     term asc — deterministic."""
-    from caterpillar_spark.query.engine import _handle_cache
+    from caterpillar_spark.indexing.build import _handle_cache
 
     if getattr(index, "has_forward", lambda: False)():
         # doc-major point read: one fwd_bucket partition + doc-sorted

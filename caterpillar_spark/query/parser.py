@@ -36,6 +36,8 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, functions as F
 
+from caterpillar_spark.indexing.build import _local_frame
+
 __all__ = [
     "Fuzzy",
     "Prefix",
@@ -305,7 +307,7 @@ def execute_query(
     for clause in spec.must:
         grp = resolved[clause]
         if grp is None:
-            return index.spark.createDataFrame([], empty_schema)
+            return _local_frame(index.spark, [], empty_schema)
         must.append(grp)
     for clause in spec.should:
         grp = resolved[clause]
@@ -460,7 +462,7 @@ def execute_query_wand(
         groups = [resolved[c] for c in spec.must]
         if any(g is None for g in groups):
             spark = compressed.lists.sparkSession
-            return spark.createDataFrame([], "doc_id long, score double")
+            return _local_frame(spark, [], "doc_id long, score double")
         if any(len(g) > 1 for g in groups):
             raise ValueError(
                 "a required variant group (fuzzy/prefix under '+') is "
@@ -475,7 +477,7 @@ def execute_query_wand(
         mode = "or"
         if not terms:
             spark = compressed.lists.sparkSession
-            return spark.createDataFrame([], "doc_id long, score double")
+            return _local_frame(spark, [], "doc_id long, score double")
     return wand_topk(
         compressed, terms, k=k, mode=mode, must_not=must_not, **wand_kw
     )
@@ -593,7 +595,7 @@ def execute_many(
             if unit == "document"
             else "doc_id long, field string, frame_seq int, score double"
         )
-        return index.spark.createDataFrame([], f"query_id string, {keys}")
+        return _local_frame(index.spark, [], f"query_id string, {keys}")
     return search_many(
         index, compiled, k=k, unit=unit, scorer=scorer, schema=schema,
         **engine_kw,

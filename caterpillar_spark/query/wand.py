@@ -49,7 +49,12 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from caterpillar_spark.indexing.build import atomic_write_json, write_table
+from caterpillar_spark.indexing.build import (
+    _handle_cache,
+    _local_frame,
+    atomic_write_json,
+    write_table,
+)
 from caterpillar_spark.indexing.postinglists import (
     BM25_B,
     BM25_K1,
@@ -149,21 +154,22 @@ def _term_doc_freqs(
     at construction (Spark's InMemoryFileIndex snapshot), so the memo
     can never drift from what this handle scores — handle and cache age
     together.  After ``append_batch`` take a fresh handle
-    (``InvertedIndex.compressed()`` builds one per call)."""
-    from caterpillar_spark.query.engine import _handle_cache
+    (``InvertedIndex.compressed()`` builds one per call).
 
+    The block rows (one per term, block and appended batch) are summed
+    on the driver: a groupBy would add a shuffle job for a few rows."""
     cache = _handle_cache(index, "_df_cache")
     missing = [t for t in terms if t not in cache]
     if missing:
         rows = (
             pruned.where(F.col("term").isin(missing))
-            .groupBy("term")
-            .agg(F.sum("n_docs").cast("long").alias("doc_freq"))
+            .select("term", "n_docs")
             .collect()
         )
-        found = {r["term"]: int(r["doc_freq"]) for r in rows}
         for t in missing:
-            cache[t] = found.get(t, 0)
+            cache[t] = 0
+        for r in rows:
+            cache[r["term"]] += int(r["n_docs"])
     return {t: cache[t] for t in terms if cache[t] > 0}
 
 
@@ -205,6 +211,12 @@ def _candidates(
         if not present or (conjunctive and len(present) < len(ts)):
             continue  # no term to score, or a required term is absent
         qspec[qid] = (present, sorted(neg), len(ts) if conjunctive else 0)
+    # created before the early return, so a query that matches nothing
+    # still reports 0 blocks scored and skipped
+    acc_skipped = acc_scored = None
+    if metrics is not None:
+        acc_skipped = metrics["blocks_skipped"] = sc.accumulator(0)
+        acc_scored = metrics["blocks_scored"] = sc.accumulator(0)
     if not qspec:
         return None
     needed = sorted({t for ts, neg, _ in qspec.values() for t in (*ts, *neg)})
@@ -220,10 +232,6 @@ def _candidates(
     from caterpillar_spark.indexing.codec import decode_doc_gaps, decode_varints
 
     avgdl = index.avgdl
-    acc_skipped = acc_scored = None
-    if metrics is not None:
-        acc_skipped = metrics["blocks_skipped"] = sc.accumulator(0)
-        acc_scored = metrics["blocks_scored"] = sc.accumulator(0)
     emit_cap = k + 32
 
     def docs_of(r):
@@ -374,8 +382,8 @@ def wand_topk(
         num_partitions, prune, metrics,
     )
     if out is None:
-        return index.lists.sparkSession.createDataFrame(
-            [], "doc_id long, score double"
+        return _local_frame(
+            index.lists.sparkSession, [], "doc_id long, score double"
         )
     # global top-k = the merge of the per-task top-ks
     # (TakeOrderedAndProject over k*P rows)
@@ -404,8 +412,10 @@ def wand_topk_many(
     ``queries`` maps query_id -> term list; ``mode`` is shared.
     Result: ``(query_id, doc_id, score)``, each query's exact top-k.
 
-    Why: per-query wall clock is dominated by Spark job scheduling
-    (~0.5-1 s, BASELINE.md), not scan work.  Here the union of all
+    Why: at small scale a warm query's wall clock is a fixed cost per
+    Spark job it launches (two here: the block-partitioned scoring
+    stage and the top-k merge), not scan work (BASELINE.md, "Where a
+    warm DataFrame-engine query's time went").  Here the union of all
     queries' terms is read in one bucket-pruned pass, each block is
     decoded AT MOST ONCE even when many queries share its terms, and
     every task keeps one top-k heap per query — Q queries cost one job
@@ -420,8 +430,8 @@ def wand_topk_many(
         k1, b, num_partitions, prune, metrics,
     )
     if out is None:
-        return index.lists.sparkSession.createDataFrame(
-            [], "query_id string, doc_id long, score double"
+        return _local_frame(
+            index.lists.sparkSession, [], "query_id string, doc_id long, score double"
         )
     from pyspark.sql.window import Window
 

@@ -157,6 +157,22 @@ def test_wand_topk_many_prune_exact(cindex):
     assert norm(pruned) == norm(exhaustive)
 
 
+@pytest.mark.parametrize("many", [False, True])
+def test_wand_metrics_zero_when_nothing_matches(cindex, many):
+    """A query none of whose terms is in the index returns no rows and
+    still reports its block counters, both 0."""
+    metrics = {}
+    if many:
+        rows = wand_topk_many(
+            cindex, {"a": ["zzznotaterm"]}, metrics=metrics
+        ).collect()
+    else:
+        rows = wand_topk(cindex, ["zzznotaterm"], metrics=metrics).collect()
+    assert rows == []
+    assert metrics["blocks_scored"].value == 0
+    assert metrics["blocks_skipped"].value == 0
+
+
 def test_search_many_checks_field_scope_against_schema(index):
     """Both top-k stages share one plan builder, so the batch path
     rejects a scoped field the schema does not declare, as the

@@ -541,3 +541,65 @@ def test_host_quality_table(spark):
     # c never links out: reciprocity is NULL (unknown), not zero
     assert got["c"].reciprocity is None
     assert abs(sum(r.rank for r in got.values()) - 1.0) < 1e-9
+
+
+def _new_persistent_rdds(spark, fn) -> int:
+    """Persistent RDDs created by ``fn()`` that are still registered
+    when it returns (ids are monotone, so older ones are excluded)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    fn()
+    return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+
+@pytest.mark.parametrize("tol", [None, 1e-15])
+def test_pagerank_block_storage_flat_in_iterations(spark, tol):
+    """Each round frees the previous round's checkpoint: what the call
+    leaves behind does not grow with ``iterations``, and the ranks are
+    those of the power method."""
+    edges_py = [
+        ("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0),
+        ("c", "a", 5.0), ("d", "a", 1.0), ("d", "e", 1.0),
+    ]
+    edges = spark.createDataFrame(
+        edges_py, "src_host string, dst_host string, n_links double"
+    )
+    init = spark.createDataFrame(
+        [("a", 0.5), ("b", 0.5)], "host string, rank double"
+    )
+    want = _np_pagerank(["a", "b", "c", "d", "e"], edges_py, 0.85, 8)
+    for iters in (2, 8):
+        got = {}
+        kept = _new_persistent_rdds(spark, lambda: got.update(
+            (r.host, r.rank)
+            for r in pagerank(edges, iterations=iters, tol=tol).collect()
+        ))
+        assert kept <= 2, (iters, kept)  # the node set and the last round
+        if iters == 8:
+            for h in want:
+                assert got[h] == pytest.approx(want[h], abs=1e-12)
+        warm = _new_persistent_rdds(spark, lambda: pagerank(
+            edges, iterations=iters, tol=tol, init_ranks=init).collect())
+        assert warm <= 2, (iters, warm)
+
+
+def test_hits_block_storage_flat_in_iterations(spark):
+    from caterpillar_spark.ops import hits
+
+    edges_py = [
+        ("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 3.0),
+        ("d", "c", 1.0), ("c", "a", 1.0),
+    ]
+    edges = spark.createDataFrame(
+        edges_py, "src_host string, dst_host string, n_links double"
+    )
+    want = _np_hits(["a", "b", "c", "d"], edges_py, 8)
+    for iters in (2, 8):
+        got = {}
+        kept = _new_persistent_rdds(spark, lambda: got.update(
+            (r.host, (r.hub, r.authority))
+            for r in hits(edges, iterations=iters).collect()
+        ))
+        assert kept <= 3, (iters, kept)  # node set, last hub, last authority
+    for host in want:
+        assert got[host] == pytest.approx(want[host], abs=1e-12)

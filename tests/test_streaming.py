@@ -348,3 +348,58 @@ def test_append_frames_each_batch_once(spark, tmp_path):
     idx = append_batch(second, path, num_buckets=4)
     assert sentences > 0 and calls.value == sentences
     assert "total_tokens" not in idx.manifest
+
+
+def test_retained_handle_answers_like_a_fresh_one(spark, tmp_path):
+    """A handle kept across writes to its path (its table schemas and
+    statistics memoized on the first queries) answers exactly like a
+    handle opened after each write: appends, the statistics fold and
+    compaction, which swaps every table directory."""
+    from caterpillar_spark.indexing.build import InvertedIndex, optimize_index
+    from caterpillar_spark.query import execute_query, search_many
+    from caterpillar_spark.query.wand import wand_topk
+
+    full = synthetic_webtext(spark, 240, seed=23, partitions=1)
+    ordinal = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("int")
+    path = str(tmp_path / "idx")
+
+    def append(lo, hi):
+        docs = ingest_webtext(full.where((ordinal >= lo) & (ordinal < hi)))
+        append_batch(build_frames(docs), path, num_buckets=4, block_bits=3)
+
+    def answers(idx):
+        def hits(df):
+            return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+
+        batch = search_many(
+            idx, {"a": {"should": ["the", "data"]}, "b": {"must": ["data"]}},
+            k=5, unit="document", scorer="bm25",
+        ).collect()
+        return {
+            "search": hits(search(
+                idx, k=10, unit="document", scorer="bm25_doc",
+                should=["the", "data"],
+            )),
+            "parser": hits(execute_query(
+                idx, "+data the~1 -zzznotaterm", k=10, scorer="bm25_doc"
+            )),
+            "many": sorted(
+                (r["query_id"], r["doc_id"], round(r["score"], 9))
+                for r in batch
+            ),
+            "wand": hits(wand_topk(idx.compressed(), ["the", "data"], k=10)),
+        }
+
+    append(0, 80)
+    kept = InvertedIndex(spark, path)
+    first = answers(kept)
+    steps = [
+        lambda: append(80, 160),
+        lambda: compact_statistics(InvertedIndex(spark, path)),
+        lambda: append(160, 240),
+        lambda: optimize_index(InvertedIndex(spark, path)),
+    ]
+    for step in steps:
+        step()
+        assert answers(kept) == answers(InvertedIndex(spark, path))
+    assert answers(kept) != first
